@@ -3,9 +3,9 @@
 The reference exposes counters through a ``statsd_endpoint`` option
 (/root/reference/src/delta/mod.rs:205-216). Spark's idiomatic equivalent
 is a ``StreamingQueryListener``: per-microbatch progress (input rows,
-processed rows/sec, batch duration, state rows) pushed to any sink —
-here a JSONL file by default; the ``emit`` hook is where a statsd/
-prometheus client plugs in unchanged.
+processed rows/sec, batch duration and its per-phase split) pushed to
+any sink — here a JSONL file by default; the ``emit`` hook is where a
+statsd/prometheus client plugs in unchanged.
 """
 
 from __future__ import annotations
@@ -37,6 +37,7 @@ class IngestMetricsListener(StreamingQueryListener):
             "num_input_rows": p.numInputRows,
             "rows_per_sec": p.processedRowsPerSecond,
             "batch_duration_ms": p.batchDuration,
+            "duration_ms": dict(p.durationMs),  # addBatch, walCommit, …
             "sources": [s.description for s in p.sources],
         }
         self.progress.append(rec)

@@ -8,14 +8,16 @@ upsert buffer → partitioned Parquet/Delta commit → SQL. Spark-first:
       → writeStream.foreachBatch(merge)         (collapse + MERGE)
       → spark.sql over the managed table
 
+Each microbatch is materialised once per microbatch: one count evaluates
+the source into a cache, and the MERGE reads only that cache.
+
 The sink is a ``ParquetUpsertTable``: a versioned-snapshot parquet table
 with an atomic version pointer — the same transactional contract the
 reference builds on delta-rs (prepare → commit version N+1,
 /root/reference/src/delta/mod.rs:301-350), reduced to what plain
-parquet + a rename can guarantee. When delta-spark is on the classpath
-(``pip install delta-spark`` in production) the same class MERGEs into a
-real Delta table instead — the v1 image has no Delta jars, so that path
-is import-gated.
+parquet + a rename can guarantee. There is no Delta MERGE path; Delta
+readers are served by ``export_delta_log``, which writes a Delta-protocol
+log over the retained snapshots.
 
 Exactly-once: Spark's offset log + ``txn_version`` tracking in the table
 metadata — a replayed microbatch (same epoch id) is skipped, making the
@@ -29,6 +31,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -57,13 +60,6 @@ def typed_images(changes: DataFrame, schema: T.StructType) -> DataFrame:
     return changes.withColumn("before", img("before")).withColumn(
         "after", img("after")
     )
-
-try:  # pragma: no cover - not in the v1 image
-    from delta.tables import DeltaTable  # noqa: F401
-
-    HAS_DELTA = True
-except Exception:  # pragma: no cover
-    HAS_DELTA = False
 
 
 class ParquetUpsertTable:
@@ -468,6 +464,35 @@ def start_cdc_pipeline(
     )
 
 
+def _foreach_microbatch(
+    stream: DataFrame,
+    apply: Callable[[DataFrame, int], None],
+    checkpoint_dir: str | None,
+    processing_time: str | None = None,
+):
+    """Start ``stream`` with ``apply(batch, epoch_id)`` run on every
+    non-empty microbatch, materialised once per microbatch: ``count()``
+    is the one evaluation of the source (one decode of the replay files,
+    one dump connection of the live source) and fills every partition of
+    the cache, each side of a union included; ``apply`` reads the cache,
+    which is dropped when the batch ends, on success or failure."""
+
+    def run(batch: DataFrame, epoch_id: int) -> None:
+        batch = batch.persist()
+        try:
+            if batch.count():
+                apply(batch, epoch_id)
+        finally:
+            batch.unpersist()
+
+    writer = stream.writeStream.foreachBatch(run).outputMode("update")
+    if checkpoint_dir:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    if processing_time:
+        writer = writer.trigger(processingTime=processing_time)
+    return writer.start()
+
+
 def _route_and_merge(
     stream: DataFrame,
     table: ParquetUpsertTable,
@@ -476,26 +501,23 @@ def _route_and_merge(
     checkpoint_dir: str | None,
     processing_time: str | None,
     app_id: str | None,
+    order_by: list[str] | None = None,
 ):
     """Shared pipeline tail: regex routing on the stream (narrow filter)
-    then collapse+MERGE per microbatch — identical for the JSONL replay
-    source and the live wire source."""
+    then collapse+MERGE of each microbatch, materialised once per
+    microbatch — identical for the JSONL replay source, the live wire
+    source and the sharded union."""
     from rust_cdc_spark.operators.router import route
 
     if dbs or tables:
         stream = route(stream, dbs or ["*"], tables or ["*"])
 
-    def apply_batch(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        table.merge(batch, txn_version=epoch_id, app_id=app_id or "cdc")
+    def merge(batch: DataFrame, epoch_id: int) -> None:
+        table.merge(
+            batch, order_by=order_by, txn_version=epoch_id, app_id=app_id or "cdc"
+        )
 
-    writer = stream.writeStream.foreachBatch(apply_batch).outputMode("update")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    return _foreach_microbatch(stream, merge, checkpoint_dir, processing_time)
 
 
 def start_live_cdc_pipeline(
@@ -550,36 +572,27 @@ def start_multi_table_pipeline(
     """Fan one CDC stream out to N tables in a single streaming query.
 
     The reference runs one IngestProcessor per table; here one microbatch
-    is cached once and each (db, table) slice MERGEs into its own sink —
-    same offset log, same epoch id for all tables (a crash replays the
-    epoch into every table idempotently, so the set of tables stays
-    mutually consistent)."""
+    is materialised once and each (db, table) slice it holds MERGEs into
+    its own sink — same offset log, same epoch id for all tables (a crash
+    replays the epoch into every table idempotently, so the set of
+    tables stays mutually consistent)."""
     from rust_cdc_spark.streaming.replay_source import register
 
     register(spark)
     reader = spark.readStream.format("mysql-cdc-replay").option("path", source_dir)
     if checkpoint_dir:
         reader = reader.option("checkpointlocation", checkpoint_dir)
-    stream = reader.load()
 
-    def apply_batch(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        batch = batch.persist()
-        try:
-            for (db, tbl), table in tables.items():
+    def fan_out(batch: DataFrame, epoch_id: int) -> None:
+        present = set(batch.select("database", "table").distinct().collect())
+        for (db, tbl), table in tables.items():
+            if (db, tbl) in present:
                 slice_ = batch.filter(
                     (F.col("database") == db) & (F.col("table") == tbl)
                 )
-                if not slice_.isEmpty():
-                    table.merge(slice_, txn_version=epoch_id, app_id=f"{db}.{tbl}")
-        finally:
-            batch.unpersist()
+                table.merge(slice_, txn_version=epoch_id, app_id=f"{db}.{tbl}")
 
-    writer = stream.writeStream.foreachBatch(apply_batch).outputMode("update")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _foreach_microbatch(reader.load(), fan_out, checkpoint_dir)
 
 
 def split_dead_letters(envelope: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -677,19 +690,5 @@ def start_sharded_pipeline(
             reader.load().withColumn("shard", F.lit(shard))
         )
     stream = reduce(lambda a, b: a.unionByName(b), streams)
-
-    def apply_batch(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        table.merge(
-            batch,
-            order_by=["shard", "log_file", "log_pos"],
-            txn_version=epoch_id,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return _route_and_merge(stream, table, None, None, checkpoint_dir, None, None,
+                            order_by=["shard", "log_file", "log_pos"])

@@ -37,6 +37,7 @@ casting happens downstream against the schema registry).
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 from dataclasses import dataclass
@@ -205,9 +206,7 @@ class BinlogReplayReader(DataSourceStreamReader):
         executed = GtidSet(self.gtid_executed)
         for fname, lo, hi in partition.files:
             with open(os.path.join(partition.directory, fname)) as fh:
-                for i, line in enumerate(fh):
-                    if i < lo or i >= hi:
-                        continue
+                for line in itertools.islice(fh, lo, hi):
                     ev = json.loads(line)
                     if executed and executed.contains(ev.get("gtid")):
                         continue

@@ -381,6 +381,8 @@ def test_ingest_metrics_listener(spark, binlog_dir, tmp_path):
     finally:
         spark.streams.removeListener(listener)
     assert any(p["num_input_rows"] > 0 for p in listener.progress)
+    assert all("addBatch" in p["duration_ms"] for p in listener.progress
+               if p["num_input_rows"] > 0)
     lines = open(str(tmp_path / "metrics.jsonl")).read().strip().splitlines()
     assert len(lines) == len(listener.progress)
 
@@ -473,3 +475,139 @@ def test_streaming_scd2_maintenance(spark, binlog_dir, tmp_path):
     # sanity: several microbatches actually ran (max 2 events each) and
     # the history carries closed + open versions
     assert len(canon(got)) >= 3
+
+
+def _persistent_rdd_ids(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_all_routed_away_batch_commits_without_touching_sink(spark, tmp_path):
+    """A microbatch whose events are all routed away still commits its
+    offsets, and the sink keeps its version and txn map."""
+    from rust_cdc_spark.streaming.pipeline import bootstrap_from_snapshot
+
+    d = str(tmp_path / "noise")
+    _write_binlog(d, "binlog.000001.jsonl", [
+        _ev(1, "I", table="audit", after={"id": 9, "name": "x", "balance": 0.0}),
+        _ev(2, "I", db="other", after={"id": 1, "name": "y", "balance": 1.0}),
+    ])
+    table = ParquetUpsertTable(str(tmp_path / "quiet"), ["id"], image_schema=USERS_SCHEMA)
+    bootstrap_from_snapshot(
+        table, spark.createDataFrame([(1, "ann", 10.0)], USERS_SCHEMA))
+    meta_before = table._meta()
+    cp = str(tmp_path / "cp_quiet")
+    q = start_cdc_pipeline(spark, d, table, dbs=["app"], tables=["users"],
+                           checkpoint_dir=cp)
+    q.processAllAvailable()
+    q.stop()
+    assert _checkpoint_offsets(cp)[-1] == ("binlog.000001.jsonl", 2)
+    assert "0" in os.listdir(os.path.join(cp, "commits"))
+    assert table._meta() == meta_before
+    assert {r.id: r.balance for r in table.read(spark).collect()} == {1: 10.0}
+
+
+class _FailOnceTable(ParquetUpsertTable):
+    """Raises from inside its second ``merge`` (at the snapshot write)."""
+
+    def __init__(self, *args, **kwargs):
+        super().__init__(*args, **kwargs)
+        self.calls = 0
+
+    def merge(self, changes, *args, **kwargs):
+        self.calls += 1
+        return super().merge(changes, *args, **kwargs)
+
+    def _write_snapshot(self, df, version):
+        if self.calls == 2:
+            raise RuntimeError("injected snapshot-write failure")
+        super()._write_snapshot(df, version)
+
+
+def test_no_cached_batch_outlives_its_microbatch(spark, binlog_dir, tmp_path):
+    """Each microbatch is persisted for its MERGE only: no cached RDD is
+    left after a clean run, nor after a batch whose merge raises; a
+    restart after the failure still converges to the batch replay."""
+    from pyspark.errors import StreamingQueryException
+
+    before = _persistent_rdd_ids(spark)
+    _run_pipeline(spark, binlog_dir, tmp_path, checkpoint="cp_clean")
+    assert _persistent_rdd_ids(spark) == before
+
+    path, cp = str(tmp_path / "failing"), str(tmp_path / "cp_fail")
+    table = _FailOnceTable(path, ["id"], image_schema=USERS_SCHEMA)
+    q = start_cdc_pipeline(spark, binlog_dir, table, dbs=["app"], tables=["users"],
+                           checkpoint_dir=cp, max_events_per_trigger=2)
+    with pytest.raises(StreamingQueryException, match="injected"):
+        q.processAllAvailable()
+    q.stop()
+    assert table.calls == 2 and table.version() == 0
+    assert _persistent_rdd_ids(spark) == before
+
+    restarted = ParquetUpsertTable(path, ["id"], image_schema=USERS_SCHEMA)
+    q = start_cdc_pipeline(spark, binlog_dir, restarted, dbs=["app"],
+                           tables=["users"], checkpoint_dir=cp,
+                           max_events_per_trigger=2)
+    q.processAllAvailable()
+    q.stop()
+    assert {r.id: r.balance for r in restarted.read(spark).collect()} == {
+        1: 15.0, 3: 30.0}
+    assert _persistent_rdd_ids(spark) == before
+
+
+def _plan_nodes(plan) -> list[str]:
+    """Node names of a physical plan, through adaptive wrappers but not
+    into the cached plan an InMemoryTableScan reads."""
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        return _plan_nodes(plan.executedPlan())
+    kids = plan.children()
+    return [plan.nodeName()] + [
+        n for i in range(kids.size()) for n in _plan_nodes(kids.apply(i))
+    ]
+
+
+class _PlanRecordingTable(ParquetUpsertTable):
+    def __init__(self, *args, **kwargs):
+        super().__init__(*args, **kwargs)
+        self.plans = []
+
+    def _write_snapshot(self, df, version):
+        self.plans.append(_plan_nodes(df._jdf.queryExecution().executedPlan()))
+        super()._write_snapshot(df, version)
+
+
+def test_snapshot_write_reads_the_cached_batch_not_the_source(
+        spark, binlog_dir, tmp_path):
+    """Once per batch: the MERGE's snapshot write scans the microbatch
+    through the in-memory cache, never through the source's RDD (which
+    shows as ``Scan ExistingRDD`` in a foreachBatch plan) — for the first
+    batch (no target yet) and for later ones (merge_upsert, whose only
+    other scan is the target's parquet)."""
+    table = _PlanRecordingTable(str(tmp_path / "planned"), ["id"],
+                                image_schema=USERS_SCHEMA)
+    q = start_cdc_pipeline(spark, binlog_dir, table, dbs=["app"], tables=["users"],
+                           checkpoint_dir=str(tmp_path / "cp_plan"),
+                           max_events_per_trigger=2)
+    q.processAllAvailable()
+    q.stop()
+    assert len(table.plans) >= 2
+    for nodes in table.plans:
+        scans = {n.strip() for n in nodes if "Scan" in n}
+        assert "InMemoryTableScan" in scans, nodes
+        assert scans <= {"InMemoryTableScan", "Scan parquet"}, nodes
+
+
+def test_multi_table_fanout_leaves_idle_sinks_untouched(spark, binlog_dir, tmp_path):
+    """A sink whose (db, table) slice is absent from every microbatch is
+    never written: no version, no txn entry."""
+    from rust_cdc_spark.streaming.pipeline import start_multi_table_pipeline
+
+    users = ParquetUpsertTable(str(tmp_path / "u"), ["id"], image_schema=USERS_SCHEMA)
+    idle = ParquetUpsertTable(str(tmp_path / "idle"), ["id"], image_schema=USERS_SCHEMA)
+    q = start_multi_table_pipeline(
+        spark, binlog_dir, {("app", "users"): users, ("app", "orders"): idle},
+        checkpoint_dir=str(tmp_path / "cp_idle"),
+    )
+    q.processAllAvailable()
+    q.stop()
+    assert {r.id: r.balance for r in users.read(spark).collect()} == {1: 15.0, 3: 30.0}
+    assert idle._meta() == {"version": -1, "txn": {}}
