@@ -39,7 +39,9 @@ def entry(spark: SparkSession) -> DataFrame:
 # _obs gained multiset-strength columns (both per VERDICT r9 #1, as
 # insurance if the type diagnosis is somehow wrong — full note at
 # queries/timeseries.py _KM_PREFIX_SQL). (2) The remaining 45 slots
-# drain the r03 staleness tier (46 names, now 7 rounds old). Tier
+# take the first 45 of the r03 staleness tier's 46 names (now 7 rounds
+# old); the 46th, window_frame_functions, lands in slot 51, so the
+# tier is not fully drained and that name leads the next round. Tier
 # lists below are GENERATED oldest-driver-row-first by
 # tools/staleness.py from the CORRECTNESS_r0N.json ledger —
 # regenerate each round instead of hand-rotating. ONE new diagnostic

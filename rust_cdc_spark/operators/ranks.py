@@ -72,8 +72,9 @@ def pin(df: DataFrame, eager: bool = False) -> DataFrame:
     :func:`release_pinned` frees the executor blocks. Query code that
     materializes a CORPUS-SCALE intermediate (shared tokenized/shingled
     projections, dedup member maps) must use this instead of a bare
-    ``localCheckpoint()``: the bench/driver sweep calls
-    ``release_pinned()`` after each query, and an unregistered lazy
+    ``localCheckpoint()``: ``bench.py``, ``tools/check_correctness.py``
+    and the test suite's autouse fixture call ``release_pinned()``
+    after each query, and an unregistered lazy
     checkpoint otherwise lingers in executor storage until driver GC
     across a 330-query single-session run (ADVICE r9). Bounded
     model-scale frames (≤|types|², centroids) may keep the bare call —
@@ -83,13 +84,14 @@ def pin(df: DataFrame, eager: bool = False) -> DataFrame:
     return p
 
 
-def release_pinned(blocking: bool = False) -> int:
+def release_pinned(blocking: bool = False, keep: int = 0) -> int:
     """Unpersist every checkpoint block pinned by
-    :func:`with_global_rank` / :func:`pin` in this session. Call after
-    the ranked results have been materialized (collected/written); the
-    returned DataFrames become unusable. Returns the number freed."""
+    :func:`with_global_rank` / :func:`pin` in this session, except the
+    ``keep`` oldest. Call after the ranked results have been materialized
+    (collected/written); the returned DataFrames become unusable.
+    Returns the number freed."""
     n = 0
-    while _PINNED:
+    while len(_PINNED) > keep:
         df = _PINNED.pop()
         try:
             df.rdd.unpersist(blocking)

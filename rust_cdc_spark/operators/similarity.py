@@ -626,6 +626,7 @@ def _blocked_pair_scores(
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_type
 
     spark = cand.sparkSession
     pairs = cand.select(
@@ -661,15 +662,18 @@ def _blocked_pair_scores(
         ]
     )
 
+    # a block pair with vectors but no candidate pairs scores nothing;
+    # its frame's dtypes follow the output schema, whatever the id type
+    empty = pd.DataFrame(
+        {
+            f.name: pd.Series(dtype=to_arrow_type(f.dataType).to_pandas_dtype())
+            for f in out_schema
+        }
+    )
+
     def score(key, lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
         if lpdf.empty:
-            return pd.DataFrame(
-                {
-                    "vec_a": pd.Series(dtype="int64"),
-                    "vec_b": pd.Series(dtype="int64"),
-                    "cos_raw": pd.Series(dtype="float64"),
-                }
-            )
+            return empty
         ra = rpdf[rpdf["side"] == "a"].reset_index(drop=True)
         rb = rpdf[rpdf["side"] == "b"].reset_index(drop=True)
         A = np.stack(ra["v"].to_numpy())

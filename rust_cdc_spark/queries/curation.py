@@ -3424,7 +3424,7 @@ _BFS_MAX_HOP = 8
     # min-hop distance per reached host, reported as a (hop → count)
     # histogram. The oracle is a recursive CTE (UNION-dedup on
     # (host, hop), depth-capped) folded to min hop; Spark runs the
-    # same frontier expansion as a bounded iterative join loop.
+    # same depth cap as a fixed number of min-hop relaxation rounds.
     oracle=f"""
     WITH RECURSIVE raw AS (
         SELECT DISTINCT {_PR_SRC} AS src, {_PR_DST} AS dst
@@ -3458,18 +3458,36 @@ def host_graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     connectivity profile behind crawl-depth budgeting and "is the
     link graph one ball or many islands" diagnostics, and the repo's
     recursive-query surface (the oracle IS a recursive CTE; Spark
-    executes the same semantics as a bounded frontier-expansion
-    loop, the iterative pattern shared with PageRank/k-core/CC).
-
-    Scale shape: the doc scan collapses to the model-scale edge table
-    (checkpointed once); each of ≤ 8 iterations is a frontier ⋈ adj
-    equi-join + anti-join against visited — frontier and visited are
-    host-scale, so every join is broadcast-able; the result is a ≤
-    9-row histogram. Early exit when a frontier empties."""
+    executes the same semantics as a fixed number of relaxation
+    rounds, see :func:`bfs_hop_histogram`)."""
     docs = load_table(spark, "documents", sf_dir)
     raw = docs.select(
         F.expr(_PR_SRC).alias("src"), F.expr(_PR_DST).alias("dst")
-    ).distinct()
+    )
+    return bfs_hop_histogram(raw)
+
+
+def bfs_hop_histogram(raw: DataFrame) -> DataFrame:
+    """(src, dst) links → (hop, n_hosts): min-hop distance of every host
+    within ``_BFS_MAX_HOP`` undirected hops of the smallest endpoint.
+
+    One lazy plan, no job until the caller acts (the one eager job is
+    the ``und`` checkpoint). Each of the ``_BFS_MAX_HOP`` rounds is a
+    min-hop relaxation ``dist ⋈ step → groupBy(t).min(hop + w)``, where
+    ``step`` is every undirected edge both ways with ``w = 1`` plus a
+    ``w = 0`` self edge per host, so a reached host keeps its distance
+    from round to round and the plan grows linearly in the hop count.
+    There is no early exit: all rounds run even once the frontier is
+    empty, since testing for that would be a Spark job per round.
+
+    Scale shape: everything after the checkpoint is model-scale
+    (``_PR_HOSTS`` hosts and their edges), so it runs in one partition
+    and no round shuffles: ``und`` is read through ``coalesce(1)``,
+    ``step`` comes from it by a generator and an in-partition
+    ``distinct`` and is broadcast once, and ``dist`` starts as a global
+    aggregate; a broadcast join keeps ``dist``'s single partition, so
+    each round's ``groupBy`` runs in place. All rounds run in one task;
+    the result is a ≤ 9-row histogram."""
     und = (
         raw.filter(F.col("src") != F.col("dst"))
         .select(
@@ -3477,32 +3495,38 @@ def host_graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.greatest("src", "dst").alias("b"),
         )
         .distinct()
-        .localCheckpoint()  # adj + source derivation reuse it
+        .localCheckpoint()  # model-scale; every round re-reads it
+        .coalesce(1)
     )
-    adj = und.select(F.col("a").alias("s"), F.col("b").alias("t")).unionAll(
-        und.select(F.col("b").alias("s"), F.col("a").alias("t"))
-    ).localCheckpoint()
-    src = und.agg(F.min("a").alias("host")).filter(
-        F.col("host").isNotNull()
-    )
-    visited = src.select("host", F.lit(0).cast("long").alias("hop"))
-    frontier = visited
-    for i in range(1, _BFS_MAX_HOP + 1):
-        nxt = (
-            frontier.join(adj, frontier["host"] == adj["s"])
-            .select(F.col("t").alias("host"))
-            .distinct()
-            .join(visited.select("host"), "host", "left_anti")
-            .select("host", F.lit(i).cast("long").alias("hop"))
-            .localCheckpoint()  # cut the lineage per wave
+    one, zero = F.lit(1).cast("long"), F.lit(0).cast("long")
+
+    def edge(s: str, t: str, w: Column) -> Column:
+        return F.struct(F.col(s).alias("s"), F.col(t).alias("t"), w.alias("w"))
+
+    step = (
+        und.select(
+            F.explode(
+                F.array(
+                    edge("a", "b", one),
+                    edge("b", "a", one),
+                    edge("a", "a", zero),
+                    edge("b", "b", zero),
+                )
+            ).alias("e")
         )
-        if nxt.isEmpty():
-            break
-        visited = visited.unionAll(nxt).localCheckpoint()
-        frontier = nxt
-    return visited.groupBy("hop").agg(
-        F.count("*").cast("long").alias("n_hosts")
+        .select("e.*")
+        .distinct()
     )
+    dist = und.agg(F.min("a").alias("host")).filter(
+        F.col("host").isNotNull()
+    ).select("host", zero.alias("hop"))
+    for _ in range(_BFS_MAX_HOP):
+        dist = (
+            dist.join(F.broadcast(step), F.col("host") == F.col("s"))
+            .groupBy(F.col("t").alias("host"))
+            .agg(F.min(F.col("hop") + F.col("w")).alias("hop"))
+        )
+    return dist.groupBy("hop").agg(F.count("*").cast("long").alias("n_hosts"))
 
 
 _TR_ITERS = 3

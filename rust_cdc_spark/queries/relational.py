@@ -57,11 +57,21 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Discounted revenue, exact in decimal in both engines: prices and
+# discounts are whole cents, and a double sum rounded to cents splits
+# between Spark and DuckDB on a half-cent tie (the engines sum in
+# different orders and round a double differently).
+_REVENUE_SQL = (
+    "CAST(l_extendedprice AS DECIMAL(12, 2))"
+    " * (1 - CAST(l_discount AS DECIMAL(4, 2)))"
+)
+
+
 @register(
     "q3_shipping_priority",
-    oracle="""
+    oracle=f"""
     SELECT l_orderkey,
-           round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+           CAST(round(sum({_REVENUE_SQL}), 2) AS DOUBLE) AS revenue,
            o_orderpriority
     FROM customer
     JOIN orders   ON c_custkey = o_custkey
@@ -95,9 +105,9 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("l_orderkey", "o_orderpriority")
         .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
+            F.round(F.sum(F.expr(_REVENUE_SQL)), 2)
+            .cast("double")
+            .alias("revenue")
         )
         .select("l_orderkey", "revenue", "o_orderpriority")
         .orderBy(F.col("revenue").desc(), F.col("l_orderkey"))
@@ -107,9 +117,9 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q5_local_supplier_volume",
-    oracle="""
+    oracle=f"""
     SELECT n_name,
-           round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+           CAST(round(sum({_REVENUE_SQL}), 2) AS DOUBLE) AS revenue
     FROM region
     JOIN nation   ON n_regionkey = r_regionkey
     JOIN customer ON c_nationkey = n_nationkey
@@ -152,9 +162,9 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
               & (F.col("s_nationkey") == F.col("c_nationkey")))
         .groupBy("n_name")
         .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
+            F.round(F.sum(F.expr(_REVENUE_SQL)), 2)
+            .cast("double")
+            .alias("revenue")
         )
     )
 

@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rust_cdc_spark.operators import incremental as IV
+from rust_cdc_spark.sources.tables import read_parquet
 from rust_cdc_spark.streaming.pipeline import ParquetUpsertTable
 
 
@@ -79,7 +80,7 @@ class MaterializedAggView:
         v = self.base_version()
         if v < 0:
             return None
-        return spark.read.parquet(os.path.join(self.path, f"v={v}"))
+        return read_parquet(spark, os.path.join(self.path, f"v={v}"))
 
     # ── measures ────────────────────────────────────────────────────────
     def _measured(self, images: DataFrame) -> DataFrame:

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from rust_cdc_spark.operators.merge import merge_upsert
+from rust_cdc_spark.sources.tables import read_parquet
 
 
 def typed_images(changes: DataFrame, schema: T.StructType) -> DataFrame:
@@ -116,7 +117,7 @@ class ParquetUpsertTable:
             raise ValueError(
                 f"version {v} not retained (older than the retention window)"
             )
-        return spark.read.parquet(snap)
+        return read_parquet(spark, snap)
 
     def history(self) -> list[int]:
         """Retained snapshot versions, oldest first (DESCRIBE HISTORY
@@ -252,7 +253,7 @@ class ParquetUpsertTable:
             for f in files
         )
         n_files = max(1, round(size / target_file_bytes))
-        df = spark.read.parquet(snap)
+        df = read_parquet(spark, snap)
         if zorder_by:
             from rust_cdc_spark.operators.layout import with_zorder_key
 

@@ -89,6 +89,8 @@ class BinlogReplayReader(DataSourceStreamReader):
         # GTID set, and read() drops the overlap before it ever reaches
         # the DataFrame.
         self.gtid_executed = options.get("gtidexecuted", "")
+        # file name -> (bytes counted, newlines in them, ends mid-line)
+        self._line_counts: dict[str, tuple[int, int, bool]] = {}
 
     # offsets are {"file": name, "line": n} — "line" is the replay analog
     # of the binlog byte position (monotone within a file).
@@ -98,8 +100,24 @@ class BinlogReplayReader(DataSourceStreamReader):
         )
 
     def _line_count(self, fname: str) -> int:
-        with open(os.path.join(self.directory, fname), "rb") as fh:
-            return sum(1 for _ in fh)
+        """Lines in ``fname``, a trailing unterminated line included.
+        Binlog files only grow, so the count is cached with the size it
+        was taken at: an unchanged file is not read again, and a grown
+        one is read only from where the last count stopped."""
+        path = os.path.join(self.directory, fname)
+        size = os.path.getsize(path)
+        done, newlines, partial = self._line_counts.get(fname, (0, 0, False))
+        if size != done:
+            if size < done:  # truncated or replaced: count from the start
+                done, newlines, partial = 0, 0, False
+            with open(path, "rb") as fh:
+                fh.seek(done)
+                for block in iter(lambda: fh.read(1 << 20), b""):
+                    newlines += block.count(b"\n")
+                    partial = not block.endswith(b"\n")
+                    done += len(block)
+            self._line_counts[fname] = (done, newlines, partial)
+        return newlines + partial
 
     def initialOffset(self) -> dict:
         files = self._files()

@@ -2,11 +2,13 @@ from __future__ import annotations
 
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from rust_cdc_spark.operators import ranks
 from rust_cdc_spark.session import get_spark
 
 SF_SMOKE = os.environ.get("RCS_TEST_SF", "/root/testdata/sf0.001")
@@ -17,3 +19,21 @@ SF_CORRECT = "/root/testdata/sf0.01"
 def spark():
     s = get_spark("rust_cdc_spark_tests", cpus=8)
     yield s
+
+
+@contextmanager
+def released_pins():
+    """Free the checkpoints pinned inside the block when it exits. Pins
+    that were already held (made by module- or class-scoped fixtures,
+    which are set up first) are kept for the tests that share them."""
+    held = len(ranks._PINNED)
+    try:
+        yield
+    finally:
+        ranks.release_pinned(keep=held)
+
+
+@pytest.fixture(autouse=True)
+def _release_pinned_after_test():
+    with released_pins():
+        yield

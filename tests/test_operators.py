@@ -580,3 +580,29 @@ class TestNearDupScorers:
                 ).collect()
             }
             assert arrow == sql
+
+    def test_arrow_scorer_string_ids(self, spark):
+        """Non-long ids: block pairs that hold vectors but no candidate
+        pair return an empty frame, which must carry the string id dtype
+        of the output schema (an int64 empty frame fails Arrow
+        conversion)."""
+        from rust_cdc_spark.sources.tables import load_table
+
+        # 12 vectors: few candidate pairs, so most of the 64 block pairs
+        # take the empty branch
+        emb = (
+            load_table(spark, "embeddings", SF_SMOKE)
+            .filter(F.col("vec_id") < 12)
+            .select(F.format_string("v%05d", "vec_id").alias("doc"), "embedding")
+        )
+        kw = dict(threshold=-1.0, n_bits=4, n_tables=8, id_col="doc")
+        arrow = {
+            (r.vec_a, r.vec_b): r.cos_sim
+            for r in SIM.embedding_near_dup_pairs(emb, scorer="arrow", **kw).collect()
+        }
+        sql = {
+            (r.vec_a, r.vec_b): r.cos_sim
+            for r in SIM.embedding_near_dup_pairs(emb, scorer="sql", **kw).collect()
+        }
+        assert arrow and all(isinstance(a, str) for a, _ in arrow)
+        assert arrow == sql

@@ -611,3 +611,30 @@ def test_multi_table_fanout_leaves_idle_sinks_untouched(spark, binlog_dir, tmp_p
     q.stop()
     assert {r.id: r.balance for r in users.read(spark).collect()} == {1: 15.0, 3: 30.0}
     assert idle._meta() == {"version": -1, "txn": {}}
+
+
+def test_replay_line_count_follows_appends(tmp_path):
+    """The reader caches each binlog file's line count with the size it
+    was taken at: an unchanged file is not read again, and an append
+    (including a half-written last line) updates the count."""
+    from unittest import mock
+
+    from rust_cdc_spark.streaming.replay_source import BinlogReplayReader
+
+    f = tmp_path / "binlog.000001.jsonl"
+    f.write_bytes(b'{"n": 1}\n{"n": 2}\n{"n": 3}\n')
+    reader = BinlogReplayReader({"path": str(tmp_path)})
+    assert reader._line_count(f.name) == 3
+    with mock.patch("builtins.open", side_effect=AssertionError("re-read")):
+        assert reader._line_count(f.name) == 3
+        assert reader.latestOffset() == {"file": f.name, "line": 3}
+    with f.open("ab") as fh:
+        fh.write(b'{"n": 4}\n{"n": 5}\n{"n"')
+    assert reader._line_count(f.name) == 6  # the partial line counts
+    with f.open("ab") as fh:
+        fh.write(b': 6}\n')
+    assert reader._line_count(f.name) == 6
+    f.write_bytes(b'{"n": 1}\n')  # replaced by a shorter file: recount
+    assert reader._line_count(f.name) == 1
+    fresh = BinlogReplayReader({"path": str(tmp_path)})
+    assert fresh._line_count(f.name) == 1

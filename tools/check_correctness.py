@@ -16,6 +16,7 @@ import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from rust_cdc_spark.operators import ranks  # noqa: E402
 from rust_cdc_spark.queries import load_all  # noqa: E402
 from rust_cdc_spark.session import get_spark  # noqa: E402
 
@@ -84,6 +85,10 @@ def main() -> int:
         except Exception:
             bad.append((name, traceback.format_exc().splitlines()[-1]))
             print(f"{name:45s} ERROR")
+        finally:
+            # the sweep runs every query in one session: free each
+            # query's pinned checkpoints once its rows are collected
+            ranks.release_pinned()
     print(f"\n{len(names) - len(bad)}/{len(names)} green at {sf_dir}")
     for name, why in bad:
         print(f"  FAIL {name}: {why}")
