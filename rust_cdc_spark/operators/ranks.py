@@ -84,14 +84,13 @@ def pin(df: DataFrame, eager: bool = False) -> DataFrame:
     return p
 
 
-def release_pinned(blocking: bool = False, keep: int = 0) -> int:
+def release_pinned(blocking: bool = False) -> int:
     """Unpersist every checkpoint block pinned by
-    :func:`with_global_rank` / :func:`pin` in this session, except the
-    ``keep`` oldest. Call after the ranked results have been materialized
-    (collected/written); the returned DataFrames become unusable.
-    Returns the number freed."""
+    :func:`with_global_rank` / :func:`pin` in this session. Call after
+    the ranked results have been materialized (collected/written); the
+    returned DataFrames become unusable. Returns the number freed."""
     n = 0
-    while len(_PINNED) > keep:
+    while _PINNED:
         df = _PINNED.pop()
         try:
             df.rdd.unpersist(blocking)

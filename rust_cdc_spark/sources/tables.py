@@ -91,32 +91,18 @@ def declared_schema(spark: SparkSession, path: str) -> T.StructType:
         spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false").lower()
         == "true"
     )
-    # pyarrow's own parquet→arrow mapping gives the nesting (structs,
-    # lists, maps); the leaf columns, in the same depth-first order, give
-    # the physical and logical types Spark's converter reads.
-    leaves = iter(pf.schema.column(i) for i in range(len(pf.schema)))
-
-    def convert(at: pa.DataType) -> T.DataType:
-        if pa.types.is_struct(at):
-            return T.StructType(
-                [T.StructField(f.name, convert(f.type), True) for f in at]
-            )
-        if pa.types.is_map(at):
-            return T.MapType(convert(at.key_type), convert(at.item_type), True)
-        if (
-            pa.types.is_list(at)
-            or pa.types.is_large_list(at)
-            or pa.types.is_fixed_size_list(at)
-        ):
-            return T.ArrayType(convert(at.value_type), True)
-        return _leaf_type(next(leaves), nanos_as_long)
-
-    return T.StructType(
-        [
-            T.StructField(f.name, convert(f.type), True)
-            for f in pf.schema.to_arrow_schema()
-        ]
-    )
+    fields = []
+    for i, f in enumerate(pf.schema.to_arrow_schema()):
+        # flat columns and lists of them (the embeddings vector) only, so
+        # the i-th column is the i-th leaf
+        elem = f.type.value_type if pa.types.is_list(f.type) else f.type
+        if pa.types.is_nested(elem):
+            raise TypeError(f"parquet column {f.name} ({f.type}) is nested")
+        dt = _leaf_type(pf.schema.column(i), nanos_as_long)
+        if elem is not f.type:
+            dt = T.ArrayType(dt, True)
+        fields.append(T.StructField(f.name, dt, True))
+    return T.StructType(fields)
 
 
 def _footer_file(path: str) -> str:
@@ -139,31 +125,15 @@ def _footer_file(path: str) -> str:
 
 def _leaf_type(col, nanos_as_long: bool) -> T.DataType:
     """One parquet leaf column → the Spark type that Spark's parquet
-    schema converter gives it under the default reader settings (those
-    that change the mapping — ``inferTimestampNTZ``, ``binaryAsString``,
-    ``int96AsTimestamp`` — are left at their defaults by this program)
-    and the session's ``nanosAsLong``."""
-    phys = col.physical_type
+    schema converter gives it under the session's ``nanosAsLong``. Only
+    the types this program's pyarrow-written tables use are mapped; any
+    other column raises ``TypeError``."""
     logical = json.loads(col.logical_type.to_json())
     kind = logical["Type"]
-    if kind == "Decimal":
-        return T.DecimalType(col.precision, col.scale)
-    if kind in ("String", "Enum", "JSON"):
+    if kind == "String":
         return T.StringType()
     if kind == "Date":
         return T.DateType()
-    if kind == "Int":
-        ints = {
-            (8, True): T.ByteType(),
-            (16, True): T.ShortType(),
-            (32, True): T.IntegerType(),
-            (64, True): T.LongType(),
-            (8, False): T.ShortType(),
-            (16, False): T.IntegerType(),
-            (32, False): T.LongType(),
-            (64, False): T.DecimalType(20, 0),
-        }
-        return ints[(logical["bitWidth"], logical["isSigned"])]
     if kind == "Timestamp":
         if logical["timeUnit"] != "nanoseconds":
             if logical["isAdjustedToUTC"]:
@@ -173,19 +143,16 @@ def _leaf_type(col, nanos_as_long: bool) -> T.DataType:
             return T.LongType()
     if kind == "None":
         plain = {
-            "BOOLEAN": T.BooleanType(),
             "INT32": T.IntegerType(),
             "INT64": T.LongType(),
             "FLOAT": T.FloatType(),
             "DOUBLE": T.DoubleType(),
-            "BYTE_ARRAY": T.BinaryType(),
-            "FIXED_LEN_BYTE_ARRAY": T.BinaryType(),
         }
-        if phys in plain:
-            return plain[phys]
+        if col.physical_type in plain:
+            return plain[col.physical_type]
     raise TypeError(
-        f"parquet column {col.path} ({phys}, {col.logical_type}) has no "
-        f"Spark type under this session's reader settings"
+        f"parquet column {col.path} ({col.physical_type}, {col.logical_type}) "
+        f"has no Spark type under this session's reader settings"
     )
 
 

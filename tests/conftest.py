@@ -2,7 +2,6 @@ from __future__ import annotations
 
 import os
 import sys
-from contextlib import contextmanager
 
 import pytest
 
@@ -21,19 +20,9 @@ def spark():
     yield s
 
 
-@contextmanager
-def released_pins():
-    """Free the checkpoints pinned inside the block when it exits. Pins
-    that were already held (made by module- or class-scoped fixtures,
-    which are set up first) are kept for the tests that share them."""
-    held = len(ranks._PINNED)
-    try:
-        yield
-    finally:
-        ranks.release_pinned(keep=held)
-
-
 @pytest.fixture(autouse=True)
 def _release_pinned_after_test():
-    with released_pins():
-        yield
+    """Free the checkpoints a test pinned, as the correctness sweep does
+    after each query."""
+    yield
+    ranks.release_pinned()

@@ -50,11 +50,6 @@ def test_histogram_matches_python_bfs(spark, edges):
     assert got == _reference(edges)
 
 
-def test_chain_is_capped():
-    hist = _reference([(i, i + 1) for i in range(10)])
-    assert max(hist) == _BFS_MAX_HOP and sum(hist.values()) == _BFS_MAX_HOP + 1
-
-
 def test_build_runs_only_the_checkpoint(spark):
     """Building the query plan runs the ``und`` checkpoint and nothing
     per hop (the frontier loop it replaced ran ~50 jobs)."""

@@ -10,29 +10,21 @@ import sys
 
 from rust_cdc_spark.operators import ranks
 from rust_cdc_spark.queries import load_all
-from tests.conftest import SF_SMOKE, released_pins
+from tests.conftest import SF_SMOKE
 
 # builds its result through with_global_rank, which pins a checkpoint
 PINNING_QUERY = "customer_revenue_gini"
 
 
-def test_fixture_releases_query_pins(spark):
+def test_query_pins_are_released(spark):
+    """The autouse fixture left nothing pinned by earlier tests; a query
+    that pins leaves nothing behind once ``release_pinned`` runs, as it
+    does after each test and each swept query."""
     assert ranks._PINNED == []
-    with released_pins():
-        load_all()[PINNING_QUERY].spark_fn(spark, SF_SMOKE).collect()
-        assert ranks._PINNED
+    load_all()[PINNING_QUERY].spark_fn(spark, SF_SMOKE).collect()
+    assert ranks._PINNED
+    ranks.release_pinned()
     assert ranks._PINNED == []
-
-
-def test_released_pins_keeps_older_pins(spark):
-    older = ranks.pin(spark.range(3), eager=True)
-    try:
-        with released_pins():
-            ranks.pin(spark.range(5), eager=True)
-        assert ranks._PINNED == [older]
-        assert older.count() == 3  # still readable
-    finally:
-        ranks.release_pinned()
 
 
 def test_check_correctness_releases_per_query(spark, monkeypatch):
