@@ -9,7 +9,9 @@ live in ``rust_cdc_spark/queries/``.
 
 from __future__ import annotations
 
+import json
 import os
+import re
 import sys
 from collections.abc import Callable
 
@@ -27,140 +29,35 @@ def entry(spark: SparkSession) -> DataFrame:
     return registry["cdc_merge_upsert"].spark_fn(spark, "/root/testdata/sf0.001")
 
 
-# Round-10 priority order (the driver checks 50 names per round, in
-# this order), built per VERDICT r9 #1/#6: (1) the events_survival_km
-# family — round 10 found the ROOT CAUSE of the four-round hash-red
-# statically: of all 330 oracles, the only two emitting a HUGEINT
-# column are exactly the two red queries (DuckDB widens the window
-# sum behind n_risk to INT128; Spark stays LONG; the driver hash is
-# type-sensitive while its schema check is not). The oracle now CASTs
-# n_risk to BIGINT (value-identical), so the parent and _hist rows
-# verify the fix; _histnw is the new window-free histogram twin and
-# _obs gained multiset-strength columns (both per VERDICT r9 #1, as
-# insurance if the type diagnosis is somehow wrong — full note at
-# queries/timeseries.py _KM_PREFIX_SQL). (2) The remaining 45 slots
-# take the first 45 of the r03 staleness tier's 46 names (now 7 rounds
-# old); the 46th, window_frame_functions, lands in slot 51, so the
-# tier is not fully drained and that name leads the next round. Tier
-# lists below are GENERATED oldest-driver-row-first by
-# tools/staleness.py from the CORRECTNESS_r0N.json ledger —
-# regenerate each round instead of hand-rotating. ONE new diagnostic
-# registered this round (_histnw; 330 -> 331), inside the r8
-# diagnostic-minimum cap. Everything below is green under
-# tools/check_correctness.py at sf0.01 AND sf0.001/sf0.1 +
-# vanilla-TZ sessions and the 0-row fixture sweep.
-_R10_PRIORITY = [
-    "events_survival_km", "events_survival_km_hist",
-    "events_survival_km_histnw",
-    "events_survival_km_probe", "events_survival_km_obs",
-]
+# The driver checks the first 50 names queries() yields, so this order
+# decides what each round re-checks: the pinned names, then every other
+# registered name by the last CORRECTNESS_r*.json round that checked it,
+# oldest first (never-checked names lead), name as tie-break.
+_PINNED = ["events_survival_km"]
 
-_STALE_R03 = [
-    "bpe_merge_candidates",
-    "bpe_train_merges",
-    "c4_quality_rules",
-    "cdc_scd2_incremental",
-    "char_entropy_filter",
-    "chunk_documents_overlap",
-    "cluster_balanced_sample",
-    "collocation_pmi_top",
-    "contamination_ngram_overlap",
-    "curation_pipeline",
-    "dedup_fuzzy_apply",
-    "dedup_incremental_new_docs",
-    "dedup_passage_exact",
-    "dedup_simhash_pairs",
-    "dedup_substring_removal",
-    "dedup_substring_spans",
-    "doc_length_histogram",
-    "dsir_importance_weights",
-    "embedding_cluster_profile",
-    "embedding_kmeans_assign",
-    "events_gap_fill",
-    "gopher_quality_rules",
-    "length_quantile_filter",
-    "mixture_interleave",
-    "mixture_schedule",
-    "mixture_temperature_weights",
-    "multimodal_feature_extract",
-    "multimodal_resize",
-    "pack_sequences",
-    "quality_logistic_score",
-    "quality_rule_attribution",
-    "retrieval_tfidf_top_terms",
-    "scalar_base64_roundtrip",
-    "similarity_ivf_topk",
-    "similarity_ivfpq_topk",
-    "similarity_lsh_topk",
-    "similarity_pq_rerank_topk",
-    "split_leakage_check",
-    "text_bigram_logprob",
-    "text_pii_scrub",
-    "text_repetition_score",
-    "train_val_test_split",
-    "url_domain_curation",
-    "url_normalize_dedup",
-    "vocab_top_tokens",
-    "window_frame_functions",
-]
-_STALE_R04 = [
-    "agg_salted_event_totals",
-    "boilerplate_sentence_inventory",
-    "contamination_semantic",
-    "contrastive_negatives",
-    "corpus_burstiness",
-    "corpus_lang_source_mi",
-    "corpus_vocab_growth_heaps",
-    "dedup_accumulation_curve",
-    "dedup_containment_pairs",
-    "dedup_jaccard_prefix_pairs",
-    "dedup_lsh_recall_eval",
-    "dedup_minhash_estimate_eval",
-    "dedup_simhash_recall_eval",
-    "dedup_source_matrix",
-    "embedding_centroid_drift",
-    "embedding_jl_project",
-    "embedding_norm_outliers",
-    "embedding_pca_abtt",
-    "embedding_quantize_int8",
-    "events_bot_score_heuristic",
-    "events_dau_wau_stickiness",
-    "events_decay_activity_score",
-    "events_hourly_seasonality",
-    "events_rolling_1h_features",
-    "events_session_stats",
-    "events_sliding_window",
-    "events_transition_matrix",
-    "events_user_profile_similarity",
-    "events_value_anomaly_mad",
-    "host_graph_triangles",
-    "join_salted_orders_lineitem",
-    "preference_pairs_by_source",
-    "quality_calibration_bins",
-    "retrieval_maxsim_topk",
-    "retrieval_mmr_rerank",
-    "revenue_growth_by_region_month",
-    "sample_nested_subsets",
-    "similarity_lsh_ndcg_eval",
-    "supplier_return_rate",
-    "text_ttr_mattr",
-    "tokenizer_fertility",
-    "vocab_countmin_topk",
-    "vocab_oov_rate",
-]
+
+def _last_checked() -> dict[str, int]:
+    """name -> the latest ledger round with a row for it."""
+    last: dict[str, int] = {}
+    root = os.path.dirname(os.path.abspath(__file__))
+    for fname in os.listdir(root):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", fname)
+        if m is None:
+            continue
+        with open(os.path.join(root, fname)) as fh:
+            for name in json.load(fh):
+                last[name] = max(last.get(name, 0), int(m.group(1)))
+    return last
+
+
 def _ordered():
     reg = load_all()
-    prio = [
-        *_R10_PRIORITY,
-        *_STALE_R03, *_STALE_R04,
-    ]
-    seen: set[str] = set()
-    first = [
-        n for n in prio
-        if n in reg and not (n in seen or seen.add(n))
-    ]
-    rest = [n for n in reg if n not in set(first)]
-    return {n: reg[n] for n in [*first, *rest]}
+    last = _last_checked()
+    rest = sorted(
+        (n for n in reg if n not in _PINNED),
+        key=lambda n: (last.get(n, 0), n),
+    )
+    return {n: reg[n] for n in [*(n for n in _PINNED if n in reg), *rest]}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

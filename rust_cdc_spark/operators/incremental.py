@@ -71,6 +71,15 @@ def batch_delta(
     touched = batch_final.select(*key_cols).distinct()
     old = prev_state.join(touched, key_cols, "left_semi")
     new = batch_final.filter(F.col("op") != OP_DELETE)
+    return signed_delta(old, new, group_cols, sum_cols)
+
+
+def signed_delta(
+    old: DataFrame, new: DataFrame, group_cols: list[str], sum_cols: list[str]
+) -> DataFrame:
+    """Per-group ``Σ new − Σ old``: retract the old images, add the new
+    ones. Returns (group_cols, __dn, __d_<sum_col>...), one row per
+    group."""
     both = contributions(old, group_cols, sum_cols, -1).unionByName(
         contributions(new, group_cols, sum_cols, +1)
     )

@@ -2,12 +2,9 @@
 
 Reference semantics: drain the last-writer-wins buffer and transactionally
 rewrite the Delta table (/root/reference/src/delta/mod.rs:301-350 commit,
-value_buffer.rs consume). With delta-spark on the classpath this is
-``MERGE INTO t USING c ON keys WHEN MATCHED AND op='D' DELETE WHEN MATCHED
-UPDATE SET * WHEN NOT MATCHED AND op!='D' INSERT *`` — see
-``streaming/pipeline.py`` for the foreachBatch wiring. The v1 image has no
-Delta jars, so ``merge_upsert`` expresses the identical relational
-semantics with built-ins:
+value_buffer.rs consume). ``merge_upsert`` expresses those MERGE
+semantics with built-ins (``streaming/pipeline.py`` has the foreachBatch
+wiring):
 
     merged = target ANTI-JOIN changes-on-keys   (rows untouched)
            ∪ changes.final-image WHERE op != 'D' (rows upserted)

@@ -2895,135 +2895,26 @@ def events_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- events_survival_km + diagnostic twins (round-9 form) ----------------
-# Driver history: hash-red in CORRECTNESS_r06 (float-ln), r07 (all-BIGINT
-# rewrite), and r08 — while the identical checker
-# (tools/check_correctness.py) is green locally at 3 SFs, in a vanilla
-# session, and under TZ stress, every round. The round-8 bisect ANSWERED
-# the stage question through the ledger: `_fold` (the identical fold +
-# recursive oracle over a LITERAL histogram) came back GREEN while
-# `_hist` (the data path only — epoch/day bucketing, censoring split,
-# at-risk window; no fold, no division, no recursion) came back RED →
-# the driver's two engine builds disagree somewhere inside the
-# epoch→day data path, not in the fold arithmetic or the hash
-# canonicalization (VERDICT r8, What's wrong #1). Round 9 therefore:
-#   * retires the two answered twins (_fold, _rcte — their verdicts are
-#     in; keeping them would burn 2 of the driver's 50 ledger slots);
-#   * rewrites the DAY DERIVATION on BOTH sides into the one form that
-#     is invariant under every engine/type mapping either side could
-#     apply to the naive-micros parquet column: pure-integer
-#     microsecond extraction, `epoch_us(ts) // 86400000000` (DuckDB)
-#     ↔ `unix_micros(cast(ts as timestamp)) div 86400000000` (Spark).
-#     This removes the only float in the path (DuckDB's
-#     floor(epoch(ts)) is a DOUBLE round-trip; a build whose epoch()
-#     ROUNDS instead of truncating shifts events within 1 s of
-#     midnight into the wrong day) and touches no date/TZ cast —
-#     epoch_us/unix_micros give the same integer whether the engine
-#     mapped the column to a naive or an instant timestamp type,
-#     which date-part casts (CAST(ts AS DATE)) do NOT;
-#   * adds TWO new 1-row twins that 3-point-bisect the data path:
-#     events_survival_km_probe — raw scan-level ingredients carrying
-#     all three candidate day derivations (legacy floor(epoch)
-#     seconds, integer-micros day, date-cast day); and
-#     events_survival_km_obs — the per-user censoring stage between
-#     the probe's scan level and _hist's histogram+window level (its
-#     own readout matrix sits on its register() note below).
-# Probe readout matrix (columns red ⇒ conclusion):
-#   * sum_epoch_s red, sum_day_us red, sum_day_date green → the engines
-#     disagree on the epoch value of the parquet timestamps themselves
-#     → r10 moves the family to the textual/date-part derivation.
-#   * sum_epoch_s red, sum_day_us green → legacy float floor(epoch) was
-#     the defect; the r9 integer-micros rewrite already fixed the
-#     parent (expect parent green alongside).
-#   * all probe columns green, parent red → the divergence is AFTER day
-#     derivation (censoring/group/window stage) → r10 bisects obs/hist.
-#   * everything green → closed; retire _hist and _probe in r10.
+# --- events_survival_km ----------------------------------------------------
+# Both sides derive the day as integer micros — `epoch_us(ts) //
+# 86400000000` (DuckDB) ↔ `unix_micros(cast(ts as timestamp)) div
+# 86400000000` (Spark) — with no float and no date/TZ cast, so either
+# engine's mapping of the naive parquet timestamp yields the same day.
+# The oracle CASTs n_risk to BIGINT: DuckDB's sum(BIGINT) widens to
+# HUGEINT, and a type-sensitive value hash then splits the engines on
+# identical values.
 #
-# ROUND-10 ROOT CAUSE (static, decisive): the r9 ledger came back
-# probe GREEN + obs GREEN + hist RED, pointing at the histogram /
-# at-risk stage — and a type sweep of ALL 330 oracles found that the
-# ONLY two whose DuckDB output carries a HUGEINT column are exactly
-# the two driver-red queries (events_survival_km and _hist), both via
-# the same expression: `sum(d + c) OVER (...)` — DuckDB's sum(BIGINT)
-# widens to HUGEINT (INT128) while Spark's sum(long) stays LONG. The
-# VALUES are identical (rows_match ✓ every round; local value-compare
-# green at 3 SFs for four rounds); a value hasher that feeds on the
-# typed binary representation (int128 vs int64) diverges on the TYPE
-# alone, while a name-normalized schema check passes — exactly the
-# observed rows ✓ / schema ✓ / hash ✗ signature, and exactly why every
-# fully-CAST twin (probe, obs, fold over a literal histogram) was
-# green while both n_risk emitters stayed red through r6-r9's
-# arithmetic rewrites. Fix: CAST the window sum to BIGINT in the
-# oracle's `ranked` CTE (value-identical; the at-risk count is far
-# below 2^63). Insurance if this diagnosis is somehow wrong
-# (VERDICT r9, Next round #1): _obs gains multiset-strength columns
-# (sum t², distinct-t, died-weighted sums) to kill the
-# "t-multiset differs while sums coincide" suspect, and a new
-# _histnw twin emits the histogram WITHOUT the window so a red
-# window evaluation can no longer hide behind a red histogram.
-
-# Shared data-path prefix: per-user durations -> day histogram ->
-# at-risk ranking. Plain (non-recursive) CTEs. Day derivation is
-# integer micros end-to-end (see the round-9 note above). The u/obs/
-# hist portion is split out so the _histnw twin can stop before the
-# window. n_risk is CAST to BIGINT — DuckDB's window sum widens
-# BIGINT to HUGEINT, and the uncast INT128 was the round-6..9
-# driver-hash divergence (round-10 root-cause note above).
-_KM_HIST_SQL = """
-    u AS (
-        SELECT user_id,
-               min(epoch_us(ts) // 86400000000) AS first_d,
-               min(CASE WHEN event_type = 'error'
-                        THEN epoch_us(ts) // 86400000000 END) AS err_d,
-               max(epoch_us(ts) // 86400000000) AS last_d
-        FROM events GROUP BY user_id
-    ),
-    obs AS (
-        SELECT user_id,
-               CASE WHEN err_d IS NOT NULL THEN err_d - first_d
-                    ELSE last_d - first_d END AS t,
-               CASE WHEN err_d IS NOT NULL THEN 1 ELSE 0 END AS died
-        FROM u
-    ),
-    hist AS (
-        SELECT t, CAST(sum(died) AS BIGINT) AS d,
-               CAST(count(*) - sum(died) AS BIGINT) AS c
-        FROM obs GROUP BY t
-    )"""
-
-_KM_PREFIX_SQL = _KM_HIST_SQL + """,
-    ranked AS (
-        SELECT t, d, c,
-               CAST(sum(d + c) OVER (ORDER BY t DESC
-                                     ROWS UNBOUNDED PRECEDING)
-                    AS BIGINT) AS n_risk,
-               row_number() OVER (ORDER BY t) AS i
-        FROM hist
-    )"""
-
-# MATERIALIZED variant of the prefix for the unrolled chain: each of
-# the 64 k_i steps references `ranked`, and plain CTEs are inlined —
-# without materialization DuckDB would re-plan and re-run the whole
-# events scan + window data path once per step (review r8). The _hist
-# twin keeps the plain form (one reference; and the bisect wants the
-# data path evaluated the ordinary way), the _rcte twin stays verbatim.
-_KM_PREFIX_MAT_SQL = _KM_PREFIX_SQL
-for _cte in ("u", "obs", "hist", "ranked"):
-    _KM_PREFIX_MAT_SQL = _KM_PREFIX_MAT_SQL.replace(
-        f"{_cte} AS (", f"{_cte} AS MATERIALIZED (", 1
-    )
-
-# Non-recursive unrolled fold: step i computes the exact integer
-# recurrence s_i = (s_{i-1} * (n_i - d_i)) // n_i off a scalar subquery
-# on step i-1. row_number() makes ranks contiguous, so step i is empty
-# exactly when the histogram has < i rows and the union reassembles the
-# whole curve. Steps are AS MATERIALIZED (DuckDB ≥0.9) — plain CTEs are
-# inlined, so a 64-step chain re-binds the whole prefix per step and
-# trips DuckDB's binder recursion limit (128); materialization binds
-# each step once. 64 steps bounds the DISTINCT duration-day count — the
-# corpus calendar span (17 at sf0.1; span, not size, so 100 TB at the
-# same retention window fits the same bound); a >64-day histogram would
-# drop rows and fail rows_match loudly rather than silently diverge.
+# Oracle fold: step i computes the exact integer recurrence
+# s_i = (s_{i-1} * (n_i - d_i)) // n_i off a scalar subquery on step
+# i-1. row_number() makes ranks contiguous, so step i is empty exactly
+# when the histogram has < i rows and the union reassembles the whole
+# curve. Every CTE is AS MATERIALIZED (DuckDB ≥0.9): plain CTEs are
+# inlined, so each of the 64 steps would re-run the events scan, and a
+# 64-step chain would re-bind the whole prefix per step and trip
+# DuckDB's binder recursion limit (128). 64 steps bounds the DISTINCT
+# duration-day count — the corpus calendar span (17 at sf0.1; span,
+# not size); a >64-day histogram would drop rows and fail rows_match
+# loudly rather than silently diverge.
 _KM_STEPS = 64
 
 
@@ -3058,11 +2949,37 @@ def _km_chain_sql(steps: int = _KM_STEPS) -> str:
     # count (reverse-cumulative over the duration histogram), deaths,
     # censored, and the KM survival Π(1 − dᵢ/nᵢ) in micro-units via
     # the EXACT integer recurrence s ← (s·(n−d)) // n starting from
-    # 10⁶ — zero floats anywhere. Round 8: the oracle's sequential
-    # fold is UNROLLED into chained plain CTEs (no WITH RECURSIVE) —
-    # the arithmetic is unchanged from r7; see the bisect note above.
+    # 10⁶ — zero floats anywhere. The oracle's sequential fold is
+    # unrolled into chained CTEs (no WITH RECURSIVE), see above.
     oracle=f"""
-    WITH {_KM_PREFIX_MAT_SQL},
+    WITH u AS MATERIALIZED (
+        SELECT user_id,
+               min(epoch_us(ts) // 86400000000) AS first_d,
+               min(CASE WHEN event_type = 'error'
+                        THEN epoch_us(ts) // 86400000000 END) AS err_d,
+               max(epoch_us(ts) // 86400000000) AS last_d
+        FROM events GROUP BY user_id
+    ),
+    obs AS MATERIALIZED (
+        SELECT user_id,
+               CASE WHEN err_d IS NOT NULL THEN err_d - first_d
+                    ELSE last_d - first_d END AS t,
+               CASE WHEN err_d IS NOT NULL THEN 1 ELSE 0 END AS died
+        FROM u
+    ),
+    hist AS MATERIALIZED (
+        SELECT t, CAST(sum(died) AS BIGINT) AS d,
+               CAST(count(*) - sum(died) AS BIGINT) AS c
+        FROM obs GROUP BY t
+    ),
+    ranked AS MATERIALIZED (
+        SELECT t, d, c,
+               CAST(sum(d + c) OVER (ORDER BY t DESC
+                                     ROWS UNBOUNDED PRECEDING)
+                    AS BIGINT) AS n_risk,
+               row_number() OVER (ORDER BY t) AS i
+        FROM hist
+    ),
     {_km_chain_sql()}
     """,
 )
@@ -3077,274 +2994,61 @@ def events_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     s ← (s·(n−d)) div n from s₀ = 10⁶, folded over the day histogram
     in t-order — every intermediate is a BIGINT, both engines floor
     identically, and a day where everyone at risk fails drives s to 0
-    with no sentinel. (Replaces the round-6 log-space variant whose
-    single round(1e6·ln(1−d/n)) float was engine-version-sensitive:
-    the one driver-red row of CORRECTNESS_r06.)
+    with no sentinel.
 
     Scale shape: ONE user-keyed agg collapses the corpus to
-    durations; everything after runs on the duration HISTOGRAM
-    (bounded by the observation span in days, not by users) — the
-    reverse-cumulative at-risk window rides those bounded value rows
-    (plan-gate allow-listed), and the sequential KM product is a
-    prefix `aggregate()` fold over the collected ≤span-days array,
-    the same replay discipline as events_markov_attribution."""
-    return _km_curve(_km_risk(spark, sf_dir))
-
-
-def _km_u(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The `u` stage shared by events_survival_km, its _hist twin, and
-    the round-9 _obs twin: per-user first/error/last DAY (integer
-    micros; the engine-proof form of the round-9 note)."""
+    durations, and one more agg to the duration HISTOGRAM (bounded by
+    the observation span in days, not by users). A single global agg
+    collects that histogram with its total n, and ONE ``aggregate()``
+    pass over it carries (n_remaining, surv, out): each day emits
+    n_risk = n_remaining and the updated surv, then subtracts d + c.
+    No window, so nothing funnels through an unpartitioned sort."""
     utc(spark)
     ev = load_table(spark, "events", sf_dir)
-    # Integer-micros day: no float, no date/TZ cast — the engine-proof
-    # form shared with the DuckDB oracle (round-9 note at
-    # _KM_PREFIX_SQL). cast(.. as timestamp) pins NTZ→LTZ through the
-    # UTC session so the micros equal the stored naive-UTC value under
-    # either parquet timestamp inference.
+    # cast(.. as timestamp) pins NTZ→LTZ through the UTC session so the
+    # micros equal the stored naive-UTC value under either parquet
+    # timestamp inference.
     day = "unix_micros(cast(ts as timestamp)) div 86400000000"
-    return ev.groupBy("user_id").agg(
+    u = ev.groupBy("user_id").agg(
         F.expr(f"min({day})").alias("first_d"),
         F.expr(
             f"min(CASE WHEN event_type = 'error' THEN {day} END)"
         ).alias("err_d"),
         F.expr(f"max({day})").alias("last_d"),
     )
-
-
-def _km_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Histogram stage shared by events_survival_km, its _hist twin
-    and the round-10 _histnw twin: per-user durations -> (t, d, c)
-    day histogram, no window."""
-    u = _km_u(spark, sf_dir)
     died = F.col("err_d").isNotNull()
-    obs = u.select(
+    hist = u.select(
         F.when(died, F.col("err_d") - F.col("first_d"))
         .otherwise(F.col("last_d") - F.col("first_d"))
         .alias("t"),
         F.when(died, 1).otherwise(0).alias("died"),
-    )
-    return obs.groupBy("t").agg(
+    ).groupBy("t").agg(
         F.sum("died").cast("long").alias("d"),
         (F.count("*") - F.sum("died")).cast("long").alias("c"),
     )
-
-
-def _km_risk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Data path shared by events_survival_km and its _hist twin:
-    per-user durations -> day histogram -> reverse-cumulative at-risk."""
-    hist = _km_hist(spark, sf_dir)
-    w_desc = (
-        Window.orderBy(F.col("t").desc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    days = hist.agg(
+        F.array_sort(F.collect_list(F.struct("t", "d", "c"))).alias("days"),
+        F.sum(F.col("d") + F.col("c")).alias("n"),
     )
-    return hist.select(
-        "t", "d", "c",
-        F.sum(F.col("d") + F.col("c")).over(w_desc).alias("n_risk"),
-    )
-
-
-def _km_curve(risk: DataFrame) -> DataFrame:
-    """Fold path shared by events_survival_km and its _fold twin: the
-    exact integer KM prefix fold over the (t, d, c, n_risk) rows."""
-    days = risk.agg(
-        F.array_sort(
-            F.collect_list(F.struct("t", "d", "c", "n_risk"))
-        ).alias("days")
-    )
-    return days.select(
-        F.col("days"), F.posexplode("days").alias("i", "x")
-    ).select(
-        F.col("x.t").alias("days_to_failure"),
-        F.col("x.n_risk").alias("n_risk"),
-        F.col("x.d").alias("n_failures"),
-        F.col("x.c").alias("n_censored"),
-        F.expr(
-            "aggregate(slice(days, 1, i + 1),"
-            " CAST(1000000 AS BIGINT),"
-            " (acc, e) -> (acc * (e.n_risk - e.d)) div e.n_risk)"
-        ).alias("surv_micro"),
-    )
-
-
-@register(
-    "events_survival_km_hist",
-    # Diagnostic twin: the pre-fold at-risk table only — same data path
-    # as events_survival_km (integer-micros day bucketing, censoring
-    # split, reverse-cumulative at-risk) with NO fold, NO division, NO
-    # recursion. RED in CORRECTNESS_r08 under the legacy floor(epoch)
-    # derivation — the readout that localized the divergence to the
-    # data path (round-9 note at _KM_PREFIX_SQL); kept this round to
-    # verify the integer-micros rewrite on the driver's engines.
-    oracle=f"""
-    WITH {_KM_PREFIX_SQL}
-    SELECT t AS days_to_failure, n_risk, d AS n_failures, c AS n_censored
-    FROM ranked
-    """,
-)
-def events_survival_km_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bisect twin of events_survival_km: emits the day histogram with
-    at-risk counts and stops before the KM product (see the bisect note
-    at _KM_PREFIX_SQL). Shares _km_risk with the parent verbatim."""
-    return _km_risk(spark, sf_dir).select(
-        F.col("t").alias("days_to_failure"),
-        F.col("n_risk"),
-        F.col("d").alias("n_failures"),
-        F.col("c").alias("n_censored"),
-    )
-
-
-@register(
-    "events_survival_km_histnw",
-    # Diagnostic twin (round 10, VERDICT r9 Next round #1): the day
-    # histogram WITHOUT the at-risk window — the last bisect point
-    # between the green _obs stage and the red _hist stage. With the
-    # round-10 HUGEINT fix in place this should be green alongside the
-    # parent; if the parent somehow stays red while this is green, the
-    # divergence is in the window evaluation itself (values, not
-    # types) and r11 rewrites n_risk window-free on both sides.
-    oracle=f"""
-    WITH {_KM_HIST_SQL}
-    SELECT t AS days_to_failure, d AS n_failures, c AS n_censored
-    FROM hist
-    """,
-)
-def events_survival_km_histnw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bisect twin of events_survival_km: the (t, d, c) duration-day
-    histogram with NO window, NO fold — isolates the GROUP BY t stage
-    from the reverse-cumulative at-risk sum that only _hist and the
-    parent carry. Shares _km_hist with both verbatim.
-
-    Scale shape: one user-keyed agg + one histogram agg over the
-    bounded duration-day values — no window, no join."""
-    return _km_hist(spark, sf_dir).select(
-        F.col("t").alias("days_to_failure"),
-        F.col("d").alias("n_failures"),
-        F.col("c").alias("n_censored"),
-    )
-
-
-# events_survival_km_fold / events_survival_km_rcte — RETIRED in round
-# 9 (VERDICT r8, Next round #2). Their CORRECTNESS_r08 rows delivered
-# the bisect verdict (_fold GREEN over a literal histogram -> the fold,
-# the recursion, the BIGINT //, and the hash canonicalization are all
-# cleared; _rcte red as expected, it contains the data path) and
-# keeping them registered would spend 2 of the driver's 50 ledger
-# slots re-proving an answered question every round.
-
-
-@register(
-    "events_survival_km_probe",
-    # Diagnostic twin (round 9): ONE row of raw data-path ingredients,
-    # no grouping beyond the global aggregate — splits "the driver's
-    # engines read the parquet timestamps differently" from "the
-    # censoring/group/window math differs" (VERDICT r8, Next round #1).
-    # Carries all three candidate day derivations side by side; the
-    # readout matrix lives in the round-9 note at _KM_PREFIX_SQL.
-    oracle="""
-    SELECT CAST(count(*) AS BIGINT) AS n_events,
-           CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
-           CAST(min(floor(epoch(ts))) AS BIGINT) AS min_epoch_s,
-           CAST(max(floor(epoch(ts))) AS BIGINT) AS max_epoch_s,
-           CAST(sum(CAST(floor(epoch(ts)) AS BIGINT)) AS BIGINT)
-               AS sum_epoch_s,
-           CAST(sum(epoch_us(ts) // 86400000000) AS BIGINT) AS sum_day_us,
-           CAST(sum(datediff('day', DATE '1970-01-01', CAST(ts AS DATE)))
-                AS BIGINT) AS sum_day_date
-    FROM events
-    """,
-)
-def events_survival_km_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bisect twin of events_survival_km: one row of raw ingredients —
-    event/user counts plus the corpus min/max/sum of the LEGACY
-    floor-epoch seconds, the sum of the round-9 integer-micros day, and
-    the sum of the date-cast day. Whichever columns hash-red on the
-    driver name the exact read path its engines disagree on (readout
-    matrix at _KM_PREFIX_SQL).
-
-    Scale shape: one global aggregate over the events scan — map-side
-    partial aggregation, a single 1-row exchange, no window, no join."""
-    utc(spark)
-    ev = load_table(spark, "events", sf_dir)
-    es = F.expr("floor(unix_timestamp(ts))").cast("long")
-    return ev.agg(
-        F.count("*").alias("n_events"),
-        F.countDistinct("user_id").cast("long").alias("n_users"),
-        F.min(es).alias("min_epoch_s"),
-        F.max(es).alias("max_epoch_s"),
-        F.sum(es).alias("sum_epoch_s"),
-        F.sum(
-            F.expr("unix_micros(cast(ts as timestamp)) div 86400000000")
-        ).alias("sum_day_us"),
-        F.sum(F.datediff(F.to_date("ts"), F.lit("1970-01-01")))
-        .cast("long")
-        .alias("sum_day_date"),
-    )
-
-
-@register(
-    "events_survival_km_obs",
-    # Diagnostic twin (round 9, the middle bisect point): ONE row of
-    # aggregates over the per-user `u`/`obs` stages — between the scan
-    # level the _probe covers and the histogram+at-risk-window level
-    # _hist covers. Whatever the r9 ledger says, the three twins give a
-    # 3-point bisect of the data path: probe red → the engines read the
-    # parquet timestamps differently; probe green + obs red → the
-    # per-user min/max/CASE censoring aggregation diverges; probe+obs
-    # green + hist red → the duration histogram / reverse-cumulative
-    # window diverges; all green + parent green → closed, retire all
-    # three in r10.
-    oracle=f"""
-    WITH {_KM_PREFIX_SQL}
-    SELECT (SELECT CAST(count(*) AS BIGINT) FROM u) AS n_users,
-           (SELECT CAST(count(err_d) AS BIGINT) FROM u) AS n_died,
-           (SELECT CAST(sum(first_d) AS BIGINT) FROM u) AS sum_first_d,
-           (SELECT CAST(sum(last_d) AS BIGINT) FROM u) AS sum_last_d,
-           (SELECT CAST(sum(err_d) AS BIGINT) FROM u) AS sum_err_d,
-           (SELECT CAST(sum(t) AS BIGINT) FROM obs) AS sum_t,
-           (SELECT CAST(min(t) AS BIGINT) FROM obs) AS min_t,
-           (SELECT CAST(max(t) AS BIGINT) FROM obs) AS max_t,
-           (SELECT CAST(sum(t * t) AS BIGINT) FROM obs) AS sum_t2,
-           (SELECT CAST(count(DISTINCT t) AS BIGINT) FROM obs)
-               AS n_distinct_t,
-           (SELECT CAST(sum(t * died) AS BIGINT) FROM obs)
-               AS sum_t_died,
-           (SELECT CAST(sum(t * t * died) AS BIGINT) FROM obs)
-               AS sum_t2_died
-    """,
-)
-def events_survival_km_obs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bisect twin of events_survival_km: one row summarizing the
-    per-user censoring stage (the SAME ``_km_u`` code path the parent
-    runs) — user/death counts, day-sums of first/last/error, and the
-    duration sum/min/max after the censoring CASE. Round 10 adds
-    multiset-strength columns (Σt², distinct-t count, died-weighted
-    Σt and Σt²) so two different (t, died) multisets can no longer
-    hide behind coinciding plain sums (VERDICT r9, Next round #1).
-    Readout matrix in the register() note above and at _KM_PREFIX_SQL.
-
-    Scale shape: one user-keyed partial agg (the parent's `u` exchange)
-    followed by a 1-row global agg — no window, no join."""
-    u = _km_u(spark, sf_dir)
-    died = F.col("err_d").isNotNull()
-    t = F.when(died, F.col("err_d") - F.col("first_d")).otherwise(
-        F.col("last_d") - F.col("first_d")
-    )
-    died01 = F.when(died, F.lit(1)).otherwise(F.lit(0))
-    return u.agg(
-        F.count("*").alias("n_users"),
-        F.count("err_d").alias("n_died"),
-        F.sum("first_d").alias("sum_first_d"),
-        F.sum("last_d").alias("sum_last_d"),
-        F.sum("err_d").alias("sum_err_d"),
-        F.sum(t).alias("sum_t"),
-        F.min(t).alias("min_t"),
-        F.max(t).alias("max_t"),
-        F.sum(t * t).alias("sum_t2"),
-        F.countDistinct(t).cast("long").alias("n_distinct_t"),
-        F.sum(t * died01).alias("sum_t_died"),
-        F.sum(t * t * died01).alias("sum_t2_died"),
-    )
+    surv = "(acc.s * (acc.n - e.d)) div acc.n"
+    return days.select(F.inline(F.expr(f"""
+        aggregate(
+            days,
+            named_struct(
+                'n', n, 's', CAST(1000000 AS BIGINT),
+                'out', CAST(array() AS array<struct<
+                    days_to_failure: bigint, n_risk: bigint,
+                    n_failures: bigint, n_censored: bigint,
+                    surv_micro: bigint>>)),
+            (acc, e) -> named_struct(
+                'n', acc.n - e.d - e.c,
+                's', {surv},
+                'out', concat(acc.out, array(named_struct(
+                    'days_to_failure', e.t, 'n_risk', acc.n,
+                    'n_failures', e.d, 'n_censored', e.c,
+                    'surv_micro', {surv})))),
+            acc -> acc.out)
+    """)))
 
 
 @register(

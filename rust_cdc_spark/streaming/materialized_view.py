@@ -127,15 +127,8 @@ class MaterializedAggView:
         new = self._measured(
             changes.filter(F.col("after").isNotNull()).select("after.*")
         )
-        sums = list(self._sum_col_map().values())
-        delta = (
-            IV.contributions(old, self.group_cols, sums, -1)
-            .unionByName(IV.contributions(new, self.group_cols, sums, +1))
-            .groupBy(*self.group_cols)
-            .agg(
-                F.sum("__dn").alias("__dn"),
-                *[F.sum(f"__d_{c}").alias(f"__d_{c}") for c in sums],
-            )
+        delta = IV.signed_delta(
+            old, new, self.group_cols, list(self._sum_col_map().values())
         )
         view = IV.apply_delta(
             self.read(spark),

@@ -324,20 +324,8 @@ class ParquetUpsertTable:
         the retained window (Delta requires a contiguous log; retention
         here plays the role of a checkpoint cutoff).
 
-        Env gate, attempted 2026-08-15 (round 6): ``import deltalake``
-        fails and ``pip download deltalake`` cannot resolve (no network
-        in the sandbox — DNS fails on the index), so a read-back test
-        with a real Delta implementation still cannot run here.
-        Re-checked 2026-08-16 (round 7): ``import deltalake`` and
-        ``import delta`` both still ImportError; no wheel has landed in
-        the image and installs remain out of scope for this sandbox.
-        Re-checked 2026-08-16 (round 8): both imports still
-        ModuleNotFoundError — unchanged.
-        Re-checked 2026-08-16 (round 9): ``import delta`` and
-        ``import deltalake`` both still ModuleNotFoundError. If
-        a ``deltalake`` wheel (delta-rs) ever lands in the image, add:
-        ``DeltaTable(path).to_pyarrow_table()`` and assert row/schema/
-        partition parity with ``self.read()``."""
+        The project depends on no Delta reader, so no test reads the
+        log back through one."""
         import uuid
 
         hist = self.history()

@@ -546,18 +546,6 @@ GLOBAL_WINDOW_ALLOWED: dict[str, tuple[int, str]] = {
         "rank + cumulative-hits windows over the <=20-row TakeOrdered"
         " result heap (the BM25 pattern)",
     ),
-    "events_survival_km": (
-        2,
-        "reverse-cumulative at-risk window over the lifetime-DURATION"
-        " value histogram (bounded by the observation span in days, not"
-        " by users); the KM product itself is an aggregate() fold, not"
-        " a window — the row_number in the collect path may add one",
-    ),
-    "events_survival_km_hist": (
-        1,
-        "bisect twin of events_survival_km: the same reverse-cumulative"
-        " at-risk window over the span-bounded duration histogram",
-    ),
     "orders_skyline_price_date": (
         1,
         "running min over the per-DAY minimum table — bounded by the"

@@ -1,14 +1,15 @@
-"""Round-9 optimization measurement harness.
+"""Optimization measurement harness.
 
 Times a list of registered queries in ONE session (warmup pass, then
 min-of-N with the noop sink — same methodology as bench.py) and
 optionally dumps each query's `.explain("formatted")` to
-plans/r09/<name>_<tag>.txt. Paired before/after runs in the same
-session protocol make the numbers comparable despite the host drift
-documented in SCALE.md §Round-9 addendum.
+plans/<DIR>/<name>.txt. Paired before/after runs in the same session
+protocol make the numbers comparable despite the host drift documented
+in SCALE.md.
 
 Usage:
-  python tools/measure_r09.py [--plans TAG] [--reps N] [--sf DIR] name...
+  python tools/measure.py [--plans DIR] [--reps N] [--sf DIR] name...
+  (e.g. --plans r11/after writes plans/r11/after/<name>.txt)
 """
 
 from __future__ import annotations
@@ -30,7 +31,8 @@ from rust_cdc_spark.session import get_spark  # noqa: E402
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="+")
-    ap.add_argument("--plans", default=None, help="dump plans with this tag")
+    ap.add_argument("--plans", default=None,
+                    help="dump plans to plans/<this path>/<name>.txt")
     ap.add_argument("--reps", type=int, default=3)
     ap.add_argument("--sf", default=os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
@@ -45,9 +47,9 @@ def main() -> None:
             sys.exit(2)
         names.extend(h for h in hits if h not in names)
 
-    spark = get_spark("measure_r09")
+    spark = get_spark("measure")
     plan_dir = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "plans", "r09")
+        os.path.abspath(__file__))), "plans", args.plans or "")
 
     def run(name: str) -> float:
         t0 = time.perf_counter()
@@ -63,10 +65,8 @@ def main() -> None:
         if args.plans:
             os.makedirs(plan_dir, exist_ok=True)
             df = reg[name].spark_fn(spark, args.sf)
-            txt = plan_text(df)
-            with open(os.path.join(
-                    plan_dir, f"{name}_{args.plans}.txt"), "w") as fh:
-                fh.write(txt)
+            with open(os.path.join(plan_dir, f"{name}.txt"), "w") as fh:
+                fh.write(plan_text(df))
         run(name)  # warmup (codegen/JIT)
         times[name] = round(min(run(name) for _ in range(args.reps)), 3)
         print(json.dumps({"query": name, "sec": times[name]}), flush=True)
