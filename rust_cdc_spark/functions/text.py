@@ -82,20 +82,6 @@ def lang_id(text: Column | str) -> Column:
     return F.when(stopword_ratio(text) >= 0.08, F.lit("en")).otherwise(F.lit("other"))
 
 
-def lang_scores(text: Column | str) -> dict[str, Column]:
-    """Per-language stopword-coverage scores (fraction of tokens in each
-    language's core list)."""
-    toks = tokens(text)
-    n = F.size(toks)
-    out = {}
-    for lang, words in LANG_STOPWORDS.items():
-        arr = F.array(*[F.lit(w) for w in words])
-        out[lang] = F.size(
-            F.filter(toks, lambda t: F.array_contains(arr, F.lower(t)))
-        ) / n
-    return out
-
-
 def lang_id_multi(text: Column | str, min_score: float = 0.04) -> Column:
     """Multi-class language ID: argmax of per-language stopword coverage,
     'other' when nothing clears ``min_score``. Deterministic tie-break by

@@ -14,7 +14,7 @@ state is the model itself (one merge pair per iteration).
   (token, freq) vocabulary). All iterations run on the vocabulary.
 - Each iteration: one explode+agg over vocab rows for pair counts, a
   1-row TakeOrdered collect (the argmax pair), and a codegen'd fold
-  rewriting the symbol arrays. `localCheckpoint` truncates lineage so
+  rewriting the symbol arrays. `pin` truncates lineage so
   nested-fold expressions don't stack across iterations.
 - Applying a learned merge table to the corpus (`segment_tokens`) is a
   pure map stage — n_merges chained folds, no shuffle.
@@ -24,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from rust_cdc_spark.operators.ranks import pin
 
 
 def _apply_merge(syms: Column, left: str, right: str) -> Column:
@@ -93,7 +95,7 @@ def learn_bpe_merges(
     pair_freq), ...] in merge order. Ties break on (freq desc, left,
     right) so training is deterministic and engine-stable. Stops early
     when the best pair's frequency drops below ``min_freq``."""
-    vocab = build_vocab(docs, text_col).localCheckpoint()
+    vocab = pin(build_vocab(docs, text_col))
     merges: list[tuple[str, str, int]] = []
     for _ in range(n_merges):
         best = (
@@ -108,9 +110,9 @@ def learn_bpe_merges(
         merges.append((left, right, n))
         # rewrite symbol arrays; checkpoint keeps each iteration's fold
         # depth at 1 and bounds the plan (vocab is model-scale data)
-        vocab = vocab.withColumn(
+        vocab = pin(vocab.withColumn(
             "syms", _apply_merge(F.col("syms"), left, right)
-        ).localCheckpoint()
+        ))
     return merges
 
 

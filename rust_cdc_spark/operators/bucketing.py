@@ -23,7 +23,7 @@ Delta table). Rules of thumb at scale:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -44,9 +44,3 @@ def write_bucketed(
     if sort:
         writer = writer.sortBy(*bucket_cols)
     writer.saveAsTable(table)
-
-
-def bucketed_tables_ready(
-    spark: SparkSession, tables: list[str]
-) -> bool:
-    return all(spark.catalog.tableExists(t) for t in tables)

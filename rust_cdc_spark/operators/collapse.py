@@ -85,17 +85,3 @@ def collapse_last_image(
     if not keep_deletes:
         out = out.filter(F.col("op") != OP_DELETE)
     return out
-
-
-def current_state(
-    cdc: DataFrame,
-    key_cols: list[str],
-    order_by: str | Sequence[str] = DEFAULT_ORDER,
-) -> DataFrame:
-    """Materialize the current table state implied by a change stream:
-    final ``after`` image per key, deletes dropped — the end state the
-    reference's upsert loop produces in its Delta table."""
-    return (
-        collapse_last_image(cdc, key_cols, order_by, keep_deletes=False)
-        .select(*key_cols, "log_pos", "ts", "after")
-    )

@@ -79,13 +79,12 @@ def _canonical_reps(
     # reuse across those references — each one re-scanned the corpus
     # and re-hashed the text (36 scans in one recall-eval plan,
     # plans/r09/dedup_lsh_recall_eval_before.txt). A lazy
-    # localCheckpoint materializes it once per query at ~40 B/doc
+    # checkpoint materializes it once per query at ~40 B/doc
     # (md5 hex + id — ~0.04% of corpus bytes at 100 TB, spilling to
     # disk via the default storage level), guide §5's cache rule:
     # reused AND expensive to recompute. pin() registers the blocks
-    # for release_pinned() (ADVICE r9: bare lazy checkpoints lingered
-    # across a 330-query single-session sweep).
-    members = pin(with_fp.select("__fp", "doc_id"))
+    # for release_pinned().
+    members = pin(with_fp.select("__fp", "doc_id"), eager=False)
     # Hash aggregation over (fp, id) ONLY, then re-attach the text by
     # id. Carrying the text through the agg (any_value(text_col))
     # forces a SortAggregate fallback — a full corpus Sort per
@@ -707,11 +706,12 @@ def connected_components(
     Per-iteration cost is exactly three keyed shuffles (neighbor join,
     min-agg, label left-join); convergence is detected from a ``moved``
     flag computed IN the label pass — no second old-vs-new join — and
-    each round's labels are ``localCheckpoint``ed, so lineage stays
+    each round's labels are pinned (``ranks.pin``), so lineage stays
     O(1) deep (no i-deep join chain to recompute or re-optimize) and
-    the convergence probe is a scan of materialized blocks. Superseded
-    label snapshots drop out of scope and are evicted by the context
-    cleaner; the label table itself is two integer columns, ~16 B/doc.
+    the convergence probe is a scan of materialized blocks. Every
+    round's snapshot stays in executor storage until the caller's
+    ``release_pinned()``: at most ``max_iter + 1`` label tables of two
+    integer columns, ~16 B/doc each.
 
     Returns (node, cluster_id) with cluster_id = min doc id reachable.
     """
@@ -719,11 +719,10 @@ def connected_components(
     edges = edges.union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).persist()
-    labels = (
+    labels = pin(
         edges.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("cluster_id", F.col("node"))
-        .localCheckpoint()
     )
     for _ in range(max_iter):
         nb = (
@@ -734,7 +733,7 @@ def connected_components(
             .groupBy("src")
             .agg(F.min("dst_label").alias("nb_label"))
         )
-        new_labels = (
+        new_labels = pin(
             labels.join(nb, labels.node == nb.src, "left")
             .select(
                 "node",
@@ -746,7 +745,6 @@ def connected_components(
             )
             .withColumn("moved", F.col("new_id") < F.col("old_id"))
             .select(F.col("node"), F.col("new_id").alias("cluster_id"), "moved")
-            .localCheckpoint()
         )
         changed = new_labels.filter("moved").limit(1).count()
         labels = new_labels.drop("moved")
@@ -867,7 +865,7 @@ def _jaccard_prefix_direct(
         # measured 4.5 → 2.6 s at sf0.1). Pinned-ledger registered
         # (ADVICE r9).
     )
-    arr = pin(arr, eager=True)
+    arr = pin(arr)
     prefix_len = (
         F.col("set_size")
         - F.ceil(F.lit(threshold) * F.col("set_size")).cast("int")

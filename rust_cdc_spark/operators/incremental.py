@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rust_cdc_spark.datamodel import OP_DELETE
+from rust_cdc_spark.operators.collapse import collapse_last_image
 
 
 def contributions(
@@ -135,21 +136,6 @@ def aggregate_view(
     )
 
 
-def last_writer_wins(
-    rows: DataFrame, key_cols: list[str], order_col: str = "log_pos"
-) -> DataFrame:
-    """Flat-frame LWW collapse: the highest-``order_col`` row per key
-    (tombstones kept — callers filter ``op`` when materializing)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*key_cols).orderBy(F.col(order_col).desc())
-    return (
-        rows.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-
-
 def join_view_advance(
     view: DataFrame,
     r_state: DataFrame,
@@ -194,12 +180,12 @@ def join_view_advance(
         .union(s_delta.select(*key_cols))
         .distinct()
     )
-    r2 = last_writer_wins(
+    r2 = collapse_last_image(
         r_state.join(touched, key_cols, "semi").unionByName(r_delta),
         key_cols,
         order_col,
     )
-    s2 = last_writer_wins(
+    s2 = collapse_last_image(
         s_state.join(touched, key_cols, "semi").unionByName(s_delta),
         key_cols,
         order_col,

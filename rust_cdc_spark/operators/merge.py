@@ -57,4 +57,4 @@ def merge_upsert(
     )
     touched = final.select(*key_cols).unionByName(moved_from).distinct()
     untouched = target.join(touched, on=key_cols, how="left_anti")
-    return untouched.unionByName(upserts.select(*target.columns))
+    return untouched.unionByName(upserts, allowMissingColumns=True)

@@ -21,7 +21,7 @@ in the DuckDB oracle's unrolled CTE replay
 
 Scale shape: ONE corpus scan (probes broadcast, codegen integer folds)
 + a per-query rank window for the pool; the pool — |probes|·P rows,
-model-scale — is localCheckpoint'd so the k greedy rounds (anti-join,
+model-scale — is pinned (ranks.pin) so the k greedy rounds (anti-join,
 pair join, argmax window) run over the materialized pool, never
 re-touching the corpus. At 100 TB the cost is the one scored scan; the
 greedy loop is constant work.
@@ -31,6 +31,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from rust_cdc_spark.operators.ranks import pin
 
 LAM_NUM = 7  # λ·10: relevance weight
 LAM_CMP = 3  # (1−λ)·10: diversity (redundancy penalty) weight
@@ -86,11 +88,10 @@ def mmr_rerank(
     # Materialize the pool: |probes|·pool rows. The k greedy rounds each
     # reference it (anti-join + pair join) — without this, every round
     # would re-run the corpus scan.
-    pool_df = (
+    pool_df = pin(
         scored.withColumn("rn", F.row_number().over(w_rel))
         .filter(F.col("rn") <= pool)
         .drop("rn")
-        .localCheckpoint()
     )
     sel = (
         pool_df.withColumn("rn", F.row_number().over(w_rel))
@@ -145,5 +146,5 @@ def mmr_rerank(
         # into a plan with O(k²) window/join subtrees (measured 211
         # Exchanges for k=4) — all model-scale rows, but quadratic
         # compile time. Each checkpoint is a ≤|probes|·k-row job.
-        selected = selected.unionByName(pick).localCheckpoint()
+        selected = pin(selected.unionByName(pick))
     return selected.select("query_id", "cand_id", "rank", "rel", "score")

@@ -49,14 +49,6 @@ FEATURE_SCHEMA = T.StructType(
 )
 
 
-def decode_image(payload: bytes) -> "object":  # pragma: no cover - stub
-    """Real codec slot (Pillow/libvips). Not available in this image."""
-    raise NotImplementedError(
-        "image codec not available in this environment; "
-        "tests use fake_feature() over the raw bytes"
-    )
-
-
 def fake_feature(payload: bytes, dim: int = 8) -> list[float]:
     """Deterministic stand-in for an embedding model: byte-histogram
     moments folded into ``dim`` buckets. Pure function of the payload —

@@ -67,33 +67,36 @@ _TOT = "__rank_n"
 _PINNED: list[DataFrame] = []
 
 
-def pin(df: DataFrame, eager: bool = False) -> DataFrame:
+def pin(df: DataFrame, eager: bool = True) -> DataFrame:
     """``localCheckpoint`` + register in the session pinned ledger so
-    :func:`release_pinned` frees the executor blocks. Query code that
-    materializes a CORPUS-SCALE intermediate (shared tokenized/shingled
-    projections, dedup member maps) must use this instead of a bare
-    ``localCheckpoint()``: ``bench.py``, ``tools/check_correctness.py``
+    :func:`release_pinned` frees the executor blocks. This is the one
+    way query code materializes an intermediate: ``localCheckpoint(``
+    appears nowhere else in the package. ``bench.py``, the sweep tools
     and the test suite's autouse fixture call ``release_pinned()``
-    after each query, and an unregistered lazy
-    checkpoint otherwise lingers in executor storage until driver GC
-    across a 330-query single-session run (ADVICE r9). Bounded
-    model-scale frames (≤|types|², centroids) may keep the bare call —
-    their footprint is config-bounded, not data-bounded."""
+    after each query; an unregistered checkpoint stays in executor
+    storage for the session's lifetime (neither ``del`` nor a driver
+    GC frees it). A loop that pins each round keeps every round's
+    blocks until that release."""
     p = df.localCheckpoint(eager=eager)
     _PINNED.append(p)
     return p
 
 
 def release_pinned(blocking: bool = False) -> int:
-    """Unpersist every checkpoint block pinned by
-    :func:`with_global_rank` / :func:`pin` in this session. Call after
-    the ranked results have been materialized (collected/written); the
-    returned DataFrames become unusable. Returns the number freed."""
+    """Unpersist every checkpoint pinned by :func:`with_global_rank` /
+    :func:`pin` in this session. Call after the query's results have
+    been materialized (collected/written); the pinned DataFrames, and
+    anything built on them, become unusable. Returns the number freed.
+
+    The blocks belong to the checkpoint's own RDD, the one the
+    ``LogicalRDD`` leaf of the pinned frame scans. ``DataFrame.rdd``
+    is a fresh conversion RDD over that plan and holds no blocks, so
+    unpersisting it frees nothing."""
     n = 0
     while _PINNED:
         df = _PINNED.pop()
         try:
-            df.rdd.unpersist(blocking)
+            df._jdf.logicalPlan().rdd().unpersist(blocking)
             n += 1
         except Exception:
             pass  # session already stopped / block already dropped
@@ -127,8 +130,11 @@ def with_global_rank(
     ranged = df.repartitionByRange(*order_by).withColumn(
         _PID, F.spark_partition_id()
     )
-    pinned = ranged.checkpoint() if reliable else ranged.localCheckpoint()
-    _PINNED.append(pinned)
+    if reliable:
+        pinned = ranged.checkpoint()
+        _PINNED.append(pinned)
+    else:
+        pinned = pin(ranged)
     counts = pinned.groupBy(_PID).agg(F.count("*").alias(_CNT))
     # offsets = running sum of the counts of all EARLIER partitions.
     # counts has one row per range partition — bounded by cluster

@@ -16,6 +16,7 @@ from rust_cdc_spark.operators import incremental as IV
 from rust_cdc_spark.operators import scd as SCD
 from rust_cdc_spark.operators.collapse import collapse_last_image
 from rust_cdc_spark.operators.merge import merge_upsert
+from rust_cdc_spark.operators.ranks import pin
 from rust_cdc_spark.operators.router import route
 from rust_cdc_spark.queries import register
 from rust_cdc_spark.sources.events_cdc import events_as_cdc
@@ -820,8 +821,8 @@ def cdc_ivm_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     r1_log, r_delta = halves(r_log)
     s1_log, s_delta = halves(s_log)
     # Bootstrapped states KEEP log_pos so delta rows order against them.
-    r1 = IV.last_writer_wins(r1_log, ["key"])
-    s1 = IV.last_writer_wins(s1_log, ["key"])
+    r1 = collapse_last_image(r1_log, ["key"], "log_pos")
+    s1 = collapse_last_image(s1_log, ["key"], "log_pos")
     v1 = (
         r1.filter(F.col("op") != "D")
         .select("key", "cents")
@@ -1341,8 +1342,8 @@ def cdc_merge_idempotence_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         collapse_last_image(first, ["key"], keep_deletes=False)
         .select(F.col("after.*"))
     )
-    once = merge_upsert(target, second, ["user_id"]).localCheckpoint()
-    twice = merge_upsert(once, second, ["user_id"]).localCheckpoint()
+    once = pin(merge_upsert(target, second, ["user_id"]))
+    twice = pin(merge_upsert(once, second, ["user_id"]))
     n1 = once.agg(F.count("*").cast("long").alias("n_rows_once"))
     n2 = twice.agg(F.count("*").cast("long").alias("n_rows_twice"))
     sym = (

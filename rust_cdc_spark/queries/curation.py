@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from rust_cdc_spark.operators.ranks import pin
 from rust_cdc_spark.queries import register
 from rust_cdc_spark.sources.tables import load_table
 
@@ -1552,14 +1553,13 @@ def length_quantile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.expr(f"cast(size({_WORDS_SPARK}) as bigint)").alias("n_tokens"),
     )
-    # localCheckpoint pins the BOUNDED histogram (≤ distinct lengths
+    # pin() materializes the BOUNDED histogram (≤ distinct lengths
     # rows) so the three downstream consumers (total, bounds, verdict
     # join) don't each re-scan the corpus to rebuild it — without it
     # this query's plan read the documents table five times.
-    hist = (
+    hist = pin(
         t.groupBy(F.col("n_tokens").alias("v"))
         .agg(F.count("*").alias("c"))
-        .localCheckpoint()
     )
     cum = hist.select(
         "v", "c",
@@ -1679,7 +1679,7 @@ def host_authority_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint it so the ONE doc scan that built it is not replayed
     # by every unrolled iteration's join lineage (31 → ~12 exchanges,
     # corpus scanned once — the BPE-trainer discipline).
-    edges = raw.filter(F.col("src") != F.col("dst")).localCheckpoint()
+    edges = pin(raw.filter(F.col("src") != F.col("dst")))
     nodes = (
         edges.select(F.col("src").alias("host"))
         .union(edges.select(F.col("dst").alias("host")))
@@ -2074,14 +2074,13 @@ def host_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = docs.select(
         F.expr(_PR_SRC).alias("src"), F.expr(_PR_DST).alias("dst")
     ).distinct()
-    und = (
+    und = pin(
         raw.filter(F.col("src") != F.col("dst"))
         .select(
             F.least("src", "dst").alias("a"),
             F.greatest("src", "dst").alias("b"),
         )
-        .distinct()
-        .localCheckpoint()  # one doc scan; reused by degree + orientation
+        .distinct()  # one doc scan; reused by degree + orientation
     )
     deg = (
         und.select(F.col("a").alias("host"))
@@ -2092,7 +2091,7 @@ def host_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     okey = deg.select(
         "host", (F.col("d") * _TRI_ORD + F.col("host")).alias("o")
     )
-    orient = (
+    orient = pin(
         und.join(okey.withColumnsRenamed({"host": "a", "o": "oa"}), "a")
         .join(okey.withColumnsRenamed({"host": "b", "o": "ob"}), "b")
         .select(
@@ -2103,8 +2102,7 @@ def host_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.col("a"))
             .alias("t"),
             F.greatest("oa", "ob").alias("t_o"),
-        )
-        .localCheckpoint()  # wedge join + closing join both read it
+        )  # wedge join + closing join both read it
     )
     e1, e2 = orient.alias("e1"), orient.alias("e2")
     wedge = e1.join(
@@ -2455,7 +2453,7 @@ def host_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = docs.select(
         F.expr(_PR_SRC).alias("src"), F.expr(_PR_DST).alias("dst")
     ).distinct()
-    edges = raw.filter(F.col("src") != F.col("dst")).localCheckpoint()
+    edges = pin(raw.filter(F.col("src") != F.col("dst")))
     nodes = (
         edges.select(F.col("src").alias("host"))
         .union(edges.select(F.col("dst").alias("host")))
@@ -2569,11 +2567,10 @@ def host_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(_PR_SRC).alias("src"), F.expr(_PR_DST).alias("dst")
     ).distinct()
     edges = raw.filter(F.col("src") != F.col("dst"))
-    nb = (
+    nb = pin(
         edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .union(edges.select(F.col("dst").alias("u"), F.col("src").alias("v")))
-        .distinct()
-        .localCheckpoint()  # host²-bounded; frees the doc-scan lineage
+        .distinct()  # host²-bounded; frees the doc-scan lineage
     )
     nodes = nb.select(F.col("u").alias("host")).distinct()
     deg = nb.groupBy(F.col("u").alias("host")).agg(
@@ -3144,7 +3141,7 @@ def host_graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = docs.select(
         F.expr(_PR_SRC).alias("src"), F.expr(_PR_DST).alias("dst")
     ).distinct()
-    edges = raw.filter(F.col("src") != F.col("dst")).localCheckpoint()
+    edges = pin(raw.filter(F.col("src") != F.col("dst")))
     sym = (
         edges.select(F.col("src").alias("host"), F.col("dst").alias("nb"))
         .union(edges.select(F.col("dst").alias("host"),
@@ -3251,7 +3248,7 @@ def host_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = docs.select(
         F.expr(_PR_SRC).alias("src"), F.expr(_PR_DST).alias("dst")
     ).distinct()
-    edges = raw.filter(F.col("src") != F.col("dst")).localCheckpoint()
+    edges = pin(raw.filter(F.col("src") != F.col("dst")))
     sym = (
         edges.select(F.col("src").alias("host"), F.col("dst").alias("nb"))
         .union(edges.select(F.col("dst").alias("host"),
@@ -3376,14 +3373,13 @@ def host_graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = docs.select(
         F.expr(_PR_SRC).alias("src"), F.expr(_PR_DST).alias("dst")
     ).distinct()
-    und = (
+    und = pin(
         raw.filter(F.col("src") != F.col("dst"))
         .select(
             F.least("src", "dst").alias("a"),
             F.greatest("src", "dst").alias("b"),
         )
-        .distinct()
-        .localCheckpoint()  # one doc scan; adj + exclusion reuse it
+        .distinct()  # one doc scan; adj + exclusion reuse it
     )
     adj = und.select(F.col("a").alias("z"), F.col("b").alias("n")).unionAll(
         und.select(F.col("b").alias("z"), F.col("a").alias("n"))
@@ -3488,14 +3484,13 @@ def bfs_hop_histogram(raw: DataFrame) -> DataFrame:
     aggregate; a broadcast join keeps ``dist``'s single partition, so
     each round's ``groupBy`` runs in place. All rounds run in one task;
     the result is a ≤ 9-row histogram."""
-    und = (
+    und = pin(
         raw.filter(F.col("src") != F.col("dst"))
         .select(
             F.least("src", "dst").alias("a"),
             F.greatest("src", "dst").alias("b"),
         )
-        .distinct()
-        .localCheckpoint()  # model-scale; every round re-reads it
+        .distinct()  # model-scale; every round re-reads it
         .coalesce(1)
     )
     one, zero = F.lit(1).cast("long"), F.lit(0).cast("long")
@@ -3627,13 +3622,13 @@ def keyword_textrank_top(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("p")
     ).select("p.x", "p.y")
-    wedges = (
+    # one corpus scan; every iteration reuses it
+    wedges = pin(
         pairs.filter(F.col("x") != F.col("y"))
         .groupBy(
             F.least("x", "y").alias("a"), F.greatest("x", "y").alias("b")
         )
         .agg(F.count("*").cast("long").alias("w"))
-        .localCheckpoint()  # one corpus scan; every iteration reuses it
     )
     arcs = wedges.select(
         F.col("a").alias("u"), F.col("b").alias("v"), "w"
@@ -3928,11 +3923,11 @@ def quality_label_model_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimate is ONE 1-row aggregate broadcast back (no shuffle of the
     corpus); the revote is map-side arithmetic into a |sources|-keyed
     agg. Two corpus scans total (estimate + revote) — the price of
-    any two-stage EM-style model; at 100 TB localCheckpoint the
+    any two-stage EM-style model; at 100 TB pin() the
     verdict frame to pay the rule expressions once."""
     docs = load_table(spark, "documents", sf_dir)
     sig = _quality_rule_flags(docs)
-    votes = sig.select(
+    votes = pin(sig.select(
         "doc_id",
         "source",
         (
@@ -3942,7 +3937,7 @@ def quality_label_model_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
             + F.col("keep_repetition").cast("int")
         ).alias("n_keep"),
         *[F.col(f"keep_{r}") for r in _RULES],
-    ).localCheckpoint()  # pay the fused rule expressions once
+    ))  # pay the fused rule expressions once
     maj = F.col("n_keep") >= 3
     nontie = F.col("n_keep") != 2
     acc = votes.agg(
@@ -4046,14 +4041,13 @@ def host_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = docs.select(
         F.expr(_PR_SRC).alias("src"), F.expr(_PR_DST).alias("dst")
     ).distinct()
-    und = (
+    und = pin(
         raw.filter(F.col("src") != F.col("dst"))
         .select(
             F.least("src", "dst").alias("a"),
             F.greatest("src", "dst").alias("b"),
         )
         .distinct()
-        .localCheckpoint()
     )
     adj = und.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
         und.select(F.col("b").alias("u"), F.col("a").alias("v"))
@@ -4461,21 +4455,19 @@ def host_graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = docs.select(
         F.expr(_PR_SRC).alias("src"), F.expr(_PR_DST).alias("dst")
     ).distinct()
-    und = (
+    und = pin(
         raw.filter(F.col("src") != F.col("dst"))
         .select(
             F.least("src", "dst").alias("a"),
             F.greatest("src", "dst").alias("b"),
         )
         .distinct()
-        .localCheckpoint()
     )
-    deg = (
+    deg = pin(
         und.select(F.col("a").alias("host"))
         .unionAll(und.select(F.col("b").alias("host")))
         .groupBy("host")
         .agg(F.count("*").cast("long").alias("d"))
-        .localCheckpoint()
     )
     out = None
     for k in _RC_KS:
@@ -4558,15 +4550,14 @@ def docs_source_vocab_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale, df-cap ubiquitous words exactly as the Jaccard dedup path
     does."""
     docs = load_table(spark, "documents", sf_dir)
-    sv = (
+    sv = pin(
         docs.select(
             "source",
             F.explode(F.expr("split(trim(text), ' ')")).alias("w0"),
         )
         .select("source", F.lower("w0").alias("w"))
         .filter(F.col("w") != "")
-        .distinct()
-        .localCheckpoint()  # index reused by sizes + both join sides
+        .distinct()  # index reused by sizes + both join sides
     )
     sizes = sv.groupBy("source").agg(F.count("*").cast("long").alias("v"))
     b = sv.select(

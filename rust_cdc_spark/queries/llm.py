@@ -19,6 +19,7 @@ from rust_cdc_spark.functions import vectors as V
 from rust_cdc_spark.operators import dedup as DD
 from rust_cdc_spark.operators import sampling as SAMP
 from rust_cdc_spark.operators import similarity as SIM
+from rust_cdc_spark.operators.ranks import pin
 from rust_cdc_spark.queries import register
 from rust_cdc_spark.queries import ann_replay as ANN_REPLAY
 from rust_cdc_spark.sources.tables import load_table
@@ -592,9 +593,6 @@ def similarity_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVF_INDEX: dict[tuple, list] = {}
-
-
 @register(
     "similarity_ivf_topk",
     oracle=ANN_REPLAY.ivf_replay_sql(
@@ -606,19 +604,14 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate top-k for the same 3 probes — the second scale
     path beside LSH: a k-means coarse quantizer (DataFrame Lloyd
     iterations) partitions the corpus; each probe scans only its
-    n_probe nearest cells. The trained quantizer is cached per corpus
-    (index building is offline in any IVF deployment; queries pay only
-    assignment + probed-cell scan). The oracle REPLAYS training —
+    n_probe nearest cells. The query trains the quantizer and assigns
+    the corpus to cells (the index build), then ranks the probe cells
+    and scans only those. The oracle REPLAYS training —
     md5 init + 2 integer-quantized Lloyd steps — plus assignment,
     probe-cell ranking, and the exact re-score as a DuckDB CTE chain
     (queries/ann_replay.py); recall vs brute force is additionally
     asserted in pytest."""
     emb = load_table(spark, "embeddings", sf_dir)
-    # The index (trained quantizer + cid-assigned corpus) is offline
-    # state in any IVF deployment — cache BOTH, keyed by the owning
-    # session (a localCheckpoint dangles if its session is recreated).
-    # Per query the engine pays probe-cell ranking + the probed-cell
-    # scan only, which is the deployment cost model.
     cents, assigned = _ivf_index(spark, sf_dir)
     probes = emb.filter(F.col("vec_id").isin(0, 1, 2)).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
@@ -947,9 +940,6 @@ def dedup_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _cluster_index(spark, sf_dir)
 
 
-_CLUSTER_INDEX: dict = {}
-
-
 def _cluster_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup clustering: Jaccard pairs → iterative connected
     components (min-label propagation) → (doc_id, cluster_id,
@@ -960,17 +950,14 @@ def _cluster_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     Also validated against an in-test union-find
     (tests/test_scale_operators.py::TestDedupClusters).
 
-    The cluster assignment is an offline INDEX, like the IVF/PQ ones
-    (_ivf_index/_pq_index): a corpus owner computes it once and then
-    both inspects it (dedup_clusters) and applies it
-    (dedup_fuzzy_apply). Cached per owning session + sf_dir, result
-    localCheckpoint-materialized so the Jaccard candidate generation
-    and the CC fixpoint run exactly once per session."""
-    key = (spark, sf_dir)
-    if key not in _CLUSTER_INDEX:
-        docs = load_table(spark, "documents", sf_dir)
-        _CLUSTER_INDEX[key] = DD.dedup_clusters(docs).localCheckpoint()
-    return _CLUSTER_INDEX[key]
+    The cluster assignment is an INDEX, like the IVF/PQ ones
+    (_ivf_index/_pq_index): dedup_clusters inspects it, and
+    dedup_fuzzy_apply, dedup_cluster_purity and
+    corpus_curation_pipeline apply it. Each query builds it; the
+    result is pinned, so the Jaccard candidate generation and the CC
+    fixpoint run once per query and release_pinned() frees them."""
+    docs = load_table(spark, "documents", sf_dir)
+    return pin(DD.dedup_clusters(docs))
 
 
 @register(
@@ -1171,39 +1158,27 @@ def sample_weighted_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return SAMP.weighted_sample(docs, "n_chars", 50, "doc_id")
 
 
-_PQ_INDEX: dict = {}
-
-
 def _ivf_index(spark: SparkSession, sf_dir: str):
-    """(centroids, cid-assigned corpus) — the offline IVF index, cached
-    per owning session (see similarity_ivf_topk)."""
+    """(centroids, pinned cid-assigned corpus) — the IVF index of the
+    embeddings table (see similarity_ivf_topk)."""
     emb = load_table(spark, "embeddings", sf_dir)
-    key = (spark, sf_dir, 8, 2, 42)
-    if key not in _IVF_INDEX:
-        cents = SIM.kmeans_centroids(
-            emb, 8, 64, iters=2, seed=42, scorer="codegen"
-        )
-        assigned = emb.select(
-            F.col("vec_id"),
-            F.col("embedding").alias("cv"),
-            SIM.nearest_cell_col("embedding", cents, scorer="codegen")
-            .alias("cid"),
-        ).localCheckpoint()
-        _IVF_INDEX[key] = (cents, assigned)
-    return _IVF_INDEX[key]
+    cents = SIM.kmeans_centroids(emb, 8, 64, iters=2, seed=42, scorer="codegen")
+    assigned = emb.select(
+        F.col("vec_id"),
+        F.col("embedding").alias("cv"),
+        SIM.nearest_cell_col("embedding", cents, scorer="codegen").alias("cid"),
+    )
+    return cents, pin(assigned)
 
 
 def _pq_index(spark: SparkSession, sf_dir: str):
-    """(codebooks, PQ code table) — the offline PQ index, cached per
-    owning session (see similarity_pq_rerank_topk)."""
+    """(codebooks, pinned PQ code table) — the PQ index of the
+    embeddings table (see similarity_pq_rerank_topk)."""
     from rust_cdc_spark.operators import pq as PQ
 
     emb = load_table(spark, "embeddings", sf_dir)
-    key = (spark, sf_dir, 16, 16, 3)
-    if key not in _PQ_INDEX:
-        cb = PQ.train_pq(emb, m=16, k=16, dim=64, iters=3)
-        _PQ_INDEX[key] = (cb, PQ.encode_pq(emb, cb).localCheckpoint())
-    return _PQ_INDEX[key]
+    cb = PQ.train_pq(emb, m=16, k=16, dim=64, iters=3)
+    return cb, pin(PQ.encode_pq(emb, cb))
 
 
 @register(
@@ -1229,10 +1204,6 @@ def similarity_pq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, "embeddings", sf_dir)
     n = emb.count()
-    # Index building is offline in deployment; the cache is keyed by
-    # the owning SparkSession (a localCheckpoint is bound to the
-    # session that created it — a hit from a recreated session would
-    # be a dangling reference).
     cb, codes = _pq_index(spark, sf_dir)
     probe_row = emb.filter(F.col("vec_id") == 0).first()
     # empty table → no probe vector: a zero probe keeps the scoring
@@ -1274,8 +1245,8 @@ def similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells' 16-byte CODE rows, and the exact rerank touches only the
     pool — the layout and query shape every billion-vector deployment
     uses, where a query's IO is corpus · n_probe/n_cells CODE bytes,
-    never raw vectors. Reuses both cached offline indexes (the IVF
-    cell assignment and the PQ code table). The oracle replays BOTH
+    never raw vectors. Builds both indexes (the IVF cell assignment
+    and the PQ code table) in the query. The oracle replays BOTH
     trainings plus the probed-cell scan as one DuckDB CTE chain —
     the full two-quantizer pipeline is value-checked end to end."""
     from rust_cdc_spark.operators import pq as PQ
@@ -2486,8 +2457,8 @@ def dedup_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: two (cluster, source)-keyed hash aggs over the
     cluster assignment and one cluster-partitioned rank window over
     ≤|sources|-row groups; purity is an exact integer micro ratio.
-    The CC build dominates and is shared/cached with the clustering
-    query itself."""
+    The CC build (the same _cluster_index as the clustering query)
+    dominates."""
     lab = _cluster_index(spark, sf_dir).select("doc_id", "cluster_id")
     docs = load_table(spark, "documents", sf_dir).select(
         "doc_id", "source"

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from rust_cdc_spark.operators.ranks import exact_global_ntile
+from rust_cdc_spark.operators.ranks import exact_global_ntile, pin
 from rust_cdc_spark.queries import register, utc
 from rust_cdc_spark.sources.tables import load_table
 
@@ -2982,9 +2982,9 @@ def part_abc_xyz_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     # earlier partitions.
     from pyspark.sql import Window as _W
 
-    ranged = p.repartitionByRange(
+    ranged = pin(p.repartitionByRange(
         F.col("cents").desc(), F.col("part")
-    ).withColumn("__pid", F.spark_partition_id()).localCheckpoint()
+    ).withColumn("__pid", F.spark_partition_id()))
     pcents = ranged.groupBy("__pid").agg(F.sum("cents").alias("__pc"))
     a = pcents.select(F.col("__pid").alias("__a"))
     b = pcents.select(F.col("__pid").alias("__b"), "__pc")

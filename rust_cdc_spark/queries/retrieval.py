@@ -847,7 +847,7 @@ def retrieval_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: ONE scored corpus scan (broadcast probes, codegen
     integer folds) + a per-query pool window; the pool
-    (|probes|·8 rows) is localCheckpoint'd, so the 4 greedy rounds are
+    (|probes|·8 rows) is pinned, so the 4 greedy rounds are
     constant-size joins that never re-touch the corpus."""
     from rust_cdc_spark.operators import mmr as MMR
 
@@ -1112,7 +1112,9 @@ def retrieval_prf_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (guide §5 cache rule; token arrays ≈ corpus bytes, spill-backed)
     # and registers it for release_pinned() so the blocks don't linger
     # across a long single-session sweep (ADVICE r9).
-    toks = pin(docs.select("doc_id", F.expr(_TOKS_SPARK).alias("toks")))
+    toks = pin(
+        docs.select("doc_id", F.expr(_TOKS_SPARK).alias("toks")), eager=False
+    )
     stats = toks.agg(
         F.count("*").alias("n_docs"), F.avg(F.size("toks")).alias("avgdl")
     )
@@ -1285,7 +1287,8 @@ def ccnet_perplexity_tails(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             "lang",
             F.expr("sum_logp_micro div n_bigrams").alias("v"),
-        )
+        ),
+        eager=False,
     )
     hist = j.groupBy("lang", "v").agg(F.count("*").alias("c"))
     cum = hist.select(

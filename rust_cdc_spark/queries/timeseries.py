@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from rust_cdc_spark.operators.ranks import exact_global_ntile
+from rust_cdc_spark.operators.ranks import exact_global_ntile, pin
 from rust_cdc_spark.queries import register, utc
 from rust_cdc_spark.sources.tables import load_table
 
@@ -558,16 +558,15 @@ def events_user_profile_similarity(
     utc(spark)
     ev = load_table(spark, "events", sf_dir)
     how = ((F.dayofweek("ts") - 1) * 24 + F.hour("ts")).alias("h")
-    # localCheckpoint pins the BOUNDED profile table (≤168 rows per
+    # pin() materializes the BOUNDED profile table (≤168 rows per
     # user): its three consumers (dot-product scan, probe slice, norm
     # agg) would otherwise each re-aggregate the raw event stream —
     # filter pushdown specializes their subtrees, so AQE exchange reuse
     # cannot merge them (verified executed_reuse_count == 0 without
     # this).
-    prof = (
+    prof = pin(
         ev.groupBy("user_id", how)
         .agg(F.count("*").cast("bigint").alias("c"))
-        .localCheckpoint()
     )
     norms = prof.groupBy("user_id").agg(
         F.sum(F.col("c") * F.col("c")).cast("bigint").alias("n2")
@@ -1700,14 +1699,13 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.lag("event_type").over(w).alias("prev_type"),
     )
-    trans = (
+    trans = pin(
         seq.filter(F.col("prev_type").isNotNull())
         .groupBy(
             F.col("prev_type").alias("from_type"),
             F.col("event_type").alias("to_type"),
         )
-        .agg(F.count("*").alias("n"))
-        .localCheckpoint()  # |types|²-sized; frees the corpus lineage
+        .agg(F.count("*").alias("n"))  # |types|²-sized; frees the corpus lineage
     )
     rs = trans.groupBy("from_type").agg(F.sum("n").alias("tot"))
     p = trans.join(rs, "from_type").select(
@@ -2730,14 +2728,13 @@ def events_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     seq = ev.select(
         "event_type", F.lag("event_type").over(w).alias("prev_type")
     )
-    trans = (
+    trans = pin(
         seq.filter(F.col("prev_type").isNotNull())
         .groupBy(
             F.col("prev_type").alias("from_type"),
             F.col("event_type").alias("to_type"),
         )
-        .agg(F.count("*").alias("n"))
-        .localCheckpoint()  # |types|²; frees the corpus lineage
+        .agg(F.count("*").alias("n"))  # |types|²; frees the corpus lineage
     )
     rs = trans.groupBy("from_type").agg(F.sum("n").alias("tot"))
     p = trans.join(rs, "from_type").select(
@@ -2745,11 +2742,10 @@ def events_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         "to_type",
         F.expr("(1000000 * n) div tot").alias("pm"),
     )
-    types = (
+    types = pin(
         trans.select(F.col("from_type").alias("t"))
         .union(trans.select(F.col("to_type").alias("t")))
         .distinct()
-        .localCheckpoint()
     )
 
     # 4-row scenario relation: 'b' keeps every edge; 'c<i>' knocks
@@ -3124,14 +3120,13 @@ def events_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     seq = ev.select(
         "event_type", F.lag("event_type").over(w).alias("prev_type")
     )
-    trans = (
+    trans = pin(
         seq.filter(F.col("prev_type").isNotNull())
         .groupBy(
             F.col("prev_type").alias("from_type"),
             F.col("event_type").alias("to_type"),
         )
         .agg(F.count("*").alias("n"))
-        .localCheckpoint()
     )
     rs = trans.groupBy("from_type").agg(F.sum("n").alias("tot"))
     p = trans.join(rs, "from_type").select(
@@ -4352,13 +4347,13 @@ def events_crosscorr_lead_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("long").alias("n"),
         F.sum("x").cast("long").alias("s"),
     )
-    dev = daily.join(F.broadcast(scal), "event_type").select(
+    dev = pin(daily.join(F.broadcast(scal), "event_type").select(
         "event_type",
         "d",
         (F.col("n") * F.col("x") - F.col("s"))
         .cast("decimal(38,0)")
         .alias("dev"),
-    ).localCheckpoint()
+    ))
     dena = dev.filter(F.col("event_type") == _XC_A).agg(
         F.sum(F.col("dev") * F.col("dev")).alias("da")
     )
@@ -4480,11 +4475,10 @@ def events_conversion_window_sensitivity(
         .groupBy("user_id")
         .agg(F.min("pe").alias("p0"))
     )
-    j = (
+    j = pin(
         u.filter(F.col("s0").isNotNull())
         .join(p, "user_id", "left")
-        .select("s0", "p0")
-        .localCheckpoint()  # four window counts reuse one tiny frame
+        .select("s0", "p0")  # four window counts reuse one tiny frame
     )
     out = None
     for h in _ATTR_WINDOWS_H:
@@ -4576,10 +4570,10 @@ def events_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg."""
     utc(spark)
     ev = load_table(spark, "events", sf_dir)
-    aw = ev.select(
+    aw = pin(ev.select(
         "user_id",
         F.expr("floor(unix_timestamp(ts)) div 604800").alias("w"),
-    ).distinct().localCheckpoint()  # three joins reuse it
+    ).distinct())  # three joins reuse it
     fw = aw.groupBy("user_id").agg(F.min("w").alias("first_w"))
     p = aw.select(
         F.col("user_id").alias("pu"), (F.col("w") + 1).alias("pw")
@@ -5198,9 +5192,9 @@ def events_activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     isl = ud.select(
         "user_id", (F.col("d") - F.row_number().over(w)).alias("grp")
     )
-    streaks = isl.groupBy("user_id", "grp").agg(
+    streaks = pin(isl.groupBy("user_id", "grp").agg(
         F.count("*").cast("long").alias("len")
-    ).localCheckpoint()  # histogram + personal-best reuse it
+    ))  # histogram + personal-best reuse it
     best = streaks.groupBy("user_id").agg(
         F.max("len").cast("long").alias("best_len")
     )

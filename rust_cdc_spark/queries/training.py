@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from rust_cdc_spark.functions import text as TX
 from rust_cdc_spark.functions import vectors as V
+from rust_cdc_spark.operators.ranks import pin
 from rust_cdc_spark.queries import register
 from rust_cdc_spark.sources.tables import load_table
 
@@ -2282,9 +2283,9 @@ def preference_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
     # recompute; the r9 before-plan had 160 parquet scans and zero
     # ReusedExchange — plans/r09/preference_bradley_terry_before.txt —
     # and the checkpoint took the query 4.72 s → 1.76 s at sf0.1).
-    e = duel.groupBy("winner", "loser").agg(
+    e = pin(duel.groupBy("winner", "loser").agg(
         F.count("*").cast("long").alias("w")
-    ).localCheckpoint()
+    ))
     rev = e.select(
         F.col("loser").alias("winner"),
         F.col("winner").alias("loser"),
@@ -2660,7 +2661,7 @@ def embedding_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
     distance against the single newly-collected center (64 ints to
     the driver per round — model-scale, the k-means/PQ precedent) and
     folding it into the running min via least(); the running state is
-    localCheckpointed so pass s doesn't replay passes 1..s−1. The
+    pinned so pass s doesn't replay passes 1..s−1. The
     argmax is a 1-row TakeOrdered, never a global window. At 100 TB:
     k linear passes, zero shuffles beyond the top-1 reduction."""
     emb = load_table(spark, "embeddings", sf_dir)
@@ -2688,9 +2689,9 @@ def embedding_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda acc, e: acc + e,
         )
 
-    state = q.select(
+    state = pin(q.select(
         "vec_id", "qv", dist_to(list(first[0].qv)).alias("mind")
-    ).localCheckpoint()
+    ))
     for s in range(2, _KC_K + 1):
         far = (
             state.orderBy(F.col("mind").desc(), "vec_id").limit(1).collect()
@@ -2698,11 +2699,11 @@ def embedding_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
         if not far or far[0].mind == 0:
             break
         centers.append((s, far[0].vec_id, far[0].mind))
-        state = state.select(
+        state = pin(state.select(
             "vec_id",
             "qv",
             F.least("mind", dist_to(list(far[0].qv))).alias("mind"),
-        ).localCheckpoint()
+        ))
     return spark.createDataFrame(
         centers, "center_rank int, vec_id bigint, sep_dist bigint"
     )
@@ -2791,7 +2792,7 @@ def tokenizer_unigram_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.expr("split(trim(text), ' ')")).alias("w")
     ).filter(F.col("w") != "")
     wc = wi.groupBy("w").agg(F.count("*").cast("long").alias("c"))
-    wc = wc.localCheckpoint()  # word model reused by 3 branches
+    wc = pin(wc)  # word model reused by 3 branches
     wt = wc.agg(F.sum("c").cast("long").alias("t"))
     chx = wc.select(F.explode(F.expr("split(w, '')")).alias("ch"), "c")
     cc = chx.groupBy("ch").agg(F.sum("c").cast("long").alias("n"))
@@ -2916,7 +2917,7 @@ def tokenizer_viterbi_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("w")
         .agg(F.count("*").cast("long").alias("c"))
     )
-    wc.localCheckpoint().createOrReplaceTempView("vit_wc")
+    pin(wc).createOrReplaceTempView("vit_wc")
     occ = spark.sql(f"""
         SELECT substr(w, i, l) AS p, CAST(sum(c) AS BIGINT) AS n
         FROM vit_wc
@@ -2926,7 +2927,7 @@ def tokenizer_viterbi_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY 1
     """)
     occ.createOrReplaceTempView("vit_occ")
-    spark.sql(
+    pin(spark.sql(
         """
         SELECT p, CAST(length(p) AS INT) AS pl,
                CAST(-round(1e6 * ln(CAST(n AS DOUBLE) / t.t)) AS BIGINT)
@@ -2935,7 +2936,7 @@ def tokenizer_viterbi_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT CAST(sum(n) AS BIGINT) AS t FROM vit_occ
         ) t
         """
-    ).localCheckpoint().createOrReplaceTempView("vit_pieces")
+    )).createOrReplaceTempView("vit_pieces")
     return spark.sql(
         """
         WITH RECURSIVE seg(w, pos, cost, path) AS (

@@ -65,7 +65,7 @@ def get_spark(app_name: str = "rust_cdc_spark", cpus: int | None = None) -> Spar
     # Reliable-checkpoint dir: lets operators that pin lineage
     # (operators/ranks.py exact global rank) opt into checkpoint()
     # — which survives executor loss on a real cluster — instead of
-    # localCheckpoint(), without every caller knowing a path. On a
+    # a local checkpoint, without every caller knowing a path. On a
     # cluster point SPARK_GRAFT_CHECKPOINT_DIR at durable storage
     # (HDFS/S3) and set SPARK_GRAFT_RELIABLE_RANKS=1.
     if spark.sparkContext.getCheckpointDir() is None:

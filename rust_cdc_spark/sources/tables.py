@@ -40,10 +40,6 @@ DEFAULT_SF_DIR = "/root/testdata/sf0.1"
 _SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
 
-def sf_dir_from_env() -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
-
-
 def load_table(spark: SparkSession, name: str, sf_dir: str) -> DataFrame:
     """Load one table under its footer-declared schema (no Spark job).
     ``events.ts`` may be stored as parquet TIMESTAMP(NANOS), which the

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from rust_cdc_spark.datamodel import ROW_OPS
 from rust_cdc_spark.operators.merge import merge_upsert
 from rust_cdc_spark.sources.tables import read_parquet
 
@@ -156,9 +157,10 @@ class ParquetUpsertTable:
         app_id: str = "cdc",
         txn_version: int | None = None,
     ) -> None:
-        """MERGE an envelope change set. ``txn_version`` (the foreachBatch
-        epoch id) makes replays no-ops — the Delta txnAppId/txnVersion
-        idempotence pattern."""
+        """MERGE an envelope change set. Only row changes (I/U/D) reach
+        the MERGE: TXN, DDL and ERR envelopes carry no row image.
+        ``txn_version`` (the foreachBatch epoch id) makes replays no-ops
+        — the Delta txnAppId/txnVersion idempotence pattern."""
         from rust_cdc_spark.operators.collapse import DEFAULT_ORDER
 
         if order_by is None:
@@ -167,13 +169,15 @@ class ParquetUpsertTable:
         if txn_version is not None and meta["txn"].get(app_id, -1) >= txn_version:
             return  # already applied — replayed microbatch
         spark = changes.sparkSession
+        changes = changes.filter(F.col("op").isin(*ROW_OPS))
         if isinstance(changes.schema["before"].dataType, T.MapType):
             schema = self.image_schema
             if schema is None:
-                # Schema-on-read fallback: infer an all-string struct from
-                # the keys observed in this batch (unioned with the target
-                # table's columns so late-arriving columns never shrink
-                # the schema). Key columns must be present.
+                # Schema-on-read fallback, re-derived every batch: an
+                # all-string struct of the target table's columns plus
+                # the keys observed in this batch, so a late-arriving
+                # column widens the table and none ever shrinks it. Key
+                # columns must be present.
                 observed = [
                     r[0]
                     for r in changes.select(
@@ -203,7 +207,6 @@ class ParquetUpsertTable:
                         for c in cols
                     ]
                 )
-                self.image_schema = schema
             changes = typed_images(changes, schema)
         target = self.read(spark)
         if target is None:

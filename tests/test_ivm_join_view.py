@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from rust_cdc_spark.operators import incremental as IV
+from rust_cdc_spark.operators.collapse import collapse_last_image
 
 # (key, log_pos, op, side, payload) — a hand-built log with the nasty
 # interleavings: update-after-delete (resurrect), delete-last, key
@@ -45,8 +46,8 @@ def _frames(spark, rows, side):
 
 
 def _recompute(spark, rows):
-    r = IV.last_writer_wins(_frames(spark, rows, "r"), ["key"])
-    s = IV.last_writer_wins(_frames(spark, rows, "s"), ["key"])
+    r = collapse_last_image(_frames(spark, rows, "r"), ["key"], "log_pos")
+    s = collapse_last_image(_frames(spark, rows, "s"), ["key"], "log_pos")
     return (
         r.filter(F.col("op") != "D")
         .select("key", "r_val")
@@ -64,8 +65,8 @@ def test_fold_equals_full_recompute(spark):
         for b in range(4)
     ]
     boot = batches[0]
-    r_state = IV.last_writer_wins(_frames(spark, boot, "r"), ["key"])
-    s_state = IV.last_writer_wins(_frames(spark, boot, "s"), ["key"])
+    r_state = collapse_last_image(_frames(spark, boot, "r"), ["key"], "log_pos")
+    s_state = collapse_last_image(_frames(spark, boot, "s"), ["key"], "log_pos")
     view = (
         r_state.filter(F.col("op") != "D")
         .select("key", "r_val")
@@ -91,7 +92,7 @@ def test_fold_equals_full_recompute(spark):
         )
     # final state tables match a whole-log collapse too
     for side, state in (("r", r_state), ("s", s_state)):
-        want = IV.last_writer_wins(_frames(spark, _LOG, side), ["key"])
+        want = collapse_last_image(_frames(spark, _LOG, side), ["key"], "log_pos")
         assert _rows(state) == _rows(want)
 
 
@@ -99,8 +100,8 @@ def test_untouched_keys_never_recomputed(spark):
     """The advance must not disturb rows of untouched keys: feed an
     empty delta and assert the view/states pass through identically."""
     boot = _LOG[:6]
-    r_state = IV.last_writer_wins(_frames(spark, boot, "r"), ["key"])
-    s_state = IV.last_writer_wins(_frames(spark, boot, "s"), ["key"])
+    r_state = collapse_last_image(_frames(spark, boot, "r"), ["key"], "log_pos")
+    s_state = collapse_last_image(_frames(spark, boot, "s"), ["key"], "log_pos")
     view = _recompute(spark, boot)
     empty_r = r_state.filter("1=0")
     empty_s = s_state.filter("1=0")
@@ -141,8 +142,8 @@ def test_fold_equals_recompute_on_random_logs(spark, data):
     rows, cut = data
     boot = [e for e in rows if e[1] <= cut]
     delta = [e for e in rows if e[1] > cut]
-    r_state = IV.last_writer_wins(_frames(spark, boot, "r"), ["key"])
-    s_state = IV.last_writer_wins(_frames(spark, boot, "s"), ["key"])
+    r_state = collapse_last_image(_frames(spark, boot, "r"), ["key"], "log_pos")
+    s_state = collapse_last_image(_frames(spark, boot, "s"), ["key"], "log_pos")
     view = _recompute(spark, boot)
     view2, r2, s2 = IV.join_view_advance(
         view,
@@ -157,5 +158,5 @@ def test_fold_equals_recompute_on_random_logs(spark, data):
     )
     for side, state in (("r", r2), ("s", s2)):
         assert _rows(state) == _rows(
-            IV.last_writer_wins(_frames(spark, rows, side), ["key"])
+            collapse_last_image(_frames(spark, rows, side), ["key"], "log_pos")
         )

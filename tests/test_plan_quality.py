@@ -218,7 +218,8 @@ class TestShuffleBudget:
             # SF) + doc-keyed island window
             ("dedup_substring_spans", 3),
             ("gopher_quality_rules", 0),   # pure map: integer rules
-            # cid-pruned code scan + pool rerank join (indexes cached)
+            # cid-pruned code scan + pool rerank join (the index builds
+            # run at query build; the plan scans their pinned checkpoints)
             ("similarity_ivfpq_topk", 3),
             # source count agg + |sources|-row window math
             ("mixture_temperature_weights", 2),

@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from rust_cdc_spark.operators import incremental as IV
+from rust_cdc_spark.operators.collapse import collapse_last_image
 
 
 def _ev(pos, op, table, row):
@@ -110,8 +111,8 @@ def test_streaming_join_view_equals_batch(spark, two_table_binlog, tmp_path):
         ss = batch_df.sparkSession
         r_delta, s_delta = _flat(batch_df)
         if not os.path.exists(paths["view"]):
-            r2 = IV.last_writer_wins(r_delta, ["key"])
-            s2 = IV.last_writer_wins(s_delta, ["key"])
+            r2 = collapse_last_image(r_delta, ["key"], "log_pos")
+            s2 = collapse_last_image(s_delta, ["key"], "log_pos")
             live = lambda df: df.filter(F.col("op") != "D")  # noqa: E731
             v2 = (
                 live(r2)
@@ -179,10 +180,10 @@ def test_streaming_join_view_equals_batch(spark, two_table_binlog, tmp_path):
     live = lambda df: df.filter(F.col("op") != "D")  # noqa: E731
     want = sorted(
         (r.key, r.cents, r.name)
-        for r in live(IV.last_writer_wins(r_all, ["key"]))
+        for r in live(collapse_last_image(r_all, ["key"], "log_pos"))
         .select("key", "cents")
         .join(
-            live(IV.last_writer_wins(s_all, ["key"])).select("key", "name"),
+            live(collapse_last_image(s_all, ["key"], "log_pos")).select("key", "name"),
             "key",
         )
         .collect()

@@ -7,6 +7,7 @@ only approximates it with its 5 s recorder).
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
 
@@ -638,3 +639,59 @@ def test_replay_line_count_follows_appends(tmp_path):
     assert reader._line_count(f.name) == 1
     fresh = BinlogReplayReader({"path": str(tmp_path)})
     assert fresh._line_count(f.name) == 1
+
+
+@pytest.mark.parametrize("routing", [(["*"], ["*"]), (None, None)],
+                         ids=["star_routing", "no_routing"])
+def test_non_row_envelopes_never_reach_the_table(spark, tmp_path, routing):
+    """TXN, DDL and ERR envelopes carry no row image: they leave the
+    table exactly as the row changes alone do, whether `*`/`*` routing
+    keeps them or no routing runs at all (the live pipeline's default)."""
+    d = str(tmp_path / "binlog")
+    _write_binlog(d, "binlog.000001.jsonl", [
+        _ev(1, "I", after={"id": 1, "name": "ann", "balance": 10.0}),
+        _ev(2, "TXN", db="", table="", xid=852),
+        _ev(3, "DDL", table="", xid=None),
+        _ev(4, "I", after={"id": 2, "name": "bob", "balance": 20.0}),
+        _ev(5, "ERR", db="", table=""),
+    ])
+    _write_binlog(d, "binlog.000002.jsonl", [
+        _ev(6, "U", before={"id": 1, "name": "ann", "balance": 10.0},
+            after={"id": 1, "name": "ann", "balance": 15.0}),
+        _ev(7, "TXN", db="", table="", xid=853),
+    ])
+    table = ParquetUpsertTable(
+        str(tmp_path / "t"), ["id"], image_schema=USERS_SCHEMA
+    )
+    dbs, tables = routing
+    q = start_cdc_pipeline(
+        spark, d, table, dbs=dbs, tables=tables,
+        checkpoint_dir=str(tmp_path / "cp"), max_events_per_trigger=4,
+    )
+    q.processAllAvailable()
+    q.stop()
+    rows = sorted((r.id, r.name, r.balance) for r in table.read(spark).collect())
+    assert rows == [(1, "ann", 15.0), (2, "bob", 20.0)]
+
+
+def test_late_column_keeps_its_values(spark, tmp_path):
+    """With no declared image schema, a column first seen in batch 2
+    widens the table and keeps its values."""
+    from rust_cdc_spark.datamodel import cdc_envelope_schema
+
+    def batch(rows):
+        return spark.createDataFrame(
+            [(datetime.datetime(2024, 1, 1), 1, "binlog.000001", pos, None,
+              None, "app", "users", op, None, after, None)
+             for pos, op, after in rows],
+            cdc_envelope_schema(),
+        )
+
+    table = ParquetUpsertTable(str(tmp_path / "late"), ["id"])
+    table.merge(batch([(1, "I", {"id": "1", "a": "x"}),
+                       (2, "I", {"id": "2", "a": "y"})]), txn_version=0)
+    table.merge(batch([(3, "I", {"id": "3", "a": "z", "b": "new"}),
+                       (4, "U", {"id": "1", "a": "x", "b": "set"})]),
+                txn_version=1)
+    got = {r.id: (r.a, r.b) for r in table.read(spark).collect()}
+    assert got == {"1": ("x", "set"), "2": ("y", None), "3": ("z", "new")}

@@ -22,6 +22,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from rust_cdc_spark.operators import ranks  # noqa: E402
 from rust_cdc_spark.queries import load_all  # noqa: E402
 from rust_cdc_spark.session import get_spark  # noqa: E402
 
@@ -64,6 +65,10 @@ def main() -> int:
             msg = str(e).splitlines()[0][:120]
             print(f"{name:45s} CRASH {msg}")
             bad.append((name, msg))
+        finally:
+            # one session for every query: free each query's pinned
+            # checkpoints once its rows are collected
+            ranks.release_pinned()
     print(f"\n{len(names)-len(bad)}/{len(names)} crash-free on empty tables")
     for name, msg in bad:
         print(f"  FAIL {name}: {msg}")

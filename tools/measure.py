@@ -1,7 +1,9 @@
 """Optimization measurement harness.
 
 Times a list of registered queries in ONE session (warmup pass, then
-min-of-N with the noop sink — same methodology as bench.py) and
+min-of-N with the noop sink — same methodology as bench.py), split
+into build (``spark_fn``: driver-side construction, including any jobs
+it launches) and exec (the noop write), and
 optionally dumps each query's `.explain("formatted")` to
 plans/<DIR>/<name>.txt. Paired before/after runs in the same session
 protocol make the numbers comparable despite the host drift documented
@@ -51,13 +53,14 @@ def main() -> None:
     plan_dir = os.path.join(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))), "plans", args.plans or "")
 
-    def run(name: str) -> float:
+    def run(name: str) -> tuple[float, float]:
         t0 = time.perf_counter()
         df = reg[name].spark_fn(spark, args.sf)
+        t1 = time.perf_counter()
         df.write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
+        t2 = time.perf_counter()
         ranks.release_pinned()
-        return dt
+        return t1 - t0, t2 - t1
 
     times: dict[str, float] = {}
     for name in names:
@@ -68,8 +71,11 @@ def main() -> None:
             with open(os.path.join(plan_dir, f"{name}.txt"), "w") as fh:
                 fh.write(plan_text(df))
         run(name)  # warmup (codegen/JIT)
-        times[name] = round(min(run(name) for _ in range(args.reps)), 3)
-        print(json.dumps({"query": name, "sec": times[name]}), flush=True)
+        build, exec_ = min((run(name) for _ in range(args.reps)), key=sum)
+        times[name] = round(build + exec_, 3)
+        print(json.dumps({"query": name, "sec": times[name],
+                          "build_s": round(build, 3), "exec_s": round(exec_, 3)}),
+              flush=True)
 
     print(json.dumps({"total": round(sum(times.values()), 3),
                       "n": len(times)}), flush=True)
