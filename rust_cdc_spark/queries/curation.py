@@ -3491,8 +3491,7 @@ def bfs_hop_histogram(raw: DataFrame) -> DataFrame:
             F.greatest("src", "dst").alias("b"),
         )
         .distinct()  # model-scale; every round re-reads it
-        .coalesce(1)
-    )
+    ).coalesce(1)
     one, zero = F.lit(1).cast("long"), F.lit(0).cast("long")
 
     def edge(s: str, t: str, w: Column) -> Column:

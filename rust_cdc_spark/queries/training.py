@@ -2657,21 +2657,22 @@ def embedding_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitted row carries the separation distance at selection time
     (the coverage radius shrinks monotonically down this column).
 
-    Scale shape: k−1 passes, each a corpus scan computing ONE codegen
-    distance against the single newly-collected center (64 ints to
-    the driver per round — model-scale, the k-means/PQ precedent) and
-    folding it into the running min via least(); the running state is
-    pinned so pass s doesn't replay passes 1..s−1. The
+    Scale shape: the quantized corpus is pinned once; then k−1 passes,
+    pass s a scan of it computing least() over the codegen distances
+    to the s centers chosen so far (64 ints to the driver per center —
+    model-scale, the k-means/PQ precedent). Recomputing the s ≤ k
+    distances costs less than carrying a running min, which would pin
+    one corpus copy per pass or shuffle the vectors back to it. The
     argmax is a 1-row TakeOrdered, never a global window. At 100 TB:
     k linear passes, zero shuffles beyond the top-1 reduction."""
     emb = load_table(spark, "embeddings", sf_dir)
-    q = emb.select(
+    q = pin(emb.select(
         "vec_id",
         F.expr(
             "transform(embedding,"
             " x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT))"
         ).alias("qv"),
-    )
+    ))
     first = q.orderBy("vec_id").limit(1).collect()
     if not first:
         return q.select(
@@ -2689,21 +2690,19 @@ def embedding_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda acc, e: acc + e,
         )
 
-    state = pin(q.select(
-        "vec_id", "qv", dist_to(list(first[0].qv)).alias("mind")
-    ))
+    dists = [dist_to(list(first[0].qv))]
     for s in range(2, _KC_K + 1):
+        mind = F.least(*dists) if len(dists) > 1 else dists[0]
         far = (
-            state.orderBy(F.col("mind").desc(), "vec_id").limit(1).collect()
+            q.select("vec_id", "qv", mind.alias("mind"))
+            .orderBy(F.col("mind").desc(), "vec_id")
+            .limit(1)
+            .collect()
         )
         if not far or far[0].mind == 0:
             break
         centers.append((s, far[0].vec_id, far[0].mind))
-        state = pin(state.select(
-            "vec_id",
-            "qv",
-            F.least("mind", dist_to(list(far[0].qv))).alias("mind"),
-        ))
+        dists.append(dist_to(list(far[0].qv)))
     return spark.createDataFrame(
         centers, "center_rank int, vec_id bigint, sep_dist bigint"
     )

@@ -170,6 +170,7 @@ class ParquetUpsertTable:
             return  # already applied — replayed microbatch
         spark = changes.sparkSession
         changes = changes.filter(F.col("op").isin(*ROW_OPS))
+        target = self.read(spark)
         if isinstance(changes.schema["before"].dataType, T.MapType):
             schema = self.image_schema
             if schema is None:
@@ -188,10 +189,9 @@ class ParquetUpsertTable:
                     .distinct()
                     .collect()
                 ]
-                existing = self.read(spark)
                 cols = list(
                     dict.fromkeys(
-                        (existing.columns if existing is not None else [])
+                        (target.columns if target is not None else [])
                         + self.key_cols
                         + sorted(observed)
                     )
@@ -200,15 +200,14 @@ class ParquetUpsertTable:
                     [
                         T.StructField(
                             c,
-                            existing.schema[c].dataType
-                            if existing is not None and c in existing.columns
+                            target.schema[c].dataType
+                            if target is not None and c in target.columns
                             else T.StringType(),
                         )
                         for c in cols
                     ]
                 )
             changes = typed_images(changes, schema)
-        target = self.read(spark)
         if target is None:
             from rust_cdc_spark.operators.collapse import collapse_last_image
 

@@ -13,7 +13,6 @@ import os
 import sys
 
 import pytest
-from pyspark.sql import DataFrame
 
 from rust_cdc_spark.operators import ranks
 from rust_cdc_spark.queries import load_all
@@ -47,39 +46,17 @@ def _stored_rdd_ids(spark) -> set[int]:
     return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
 
 
-def _holds_frame(v, depth: int = 3) -> bool:
-    if isinstance(v, DataFrame):
-        return True
-    if depth == 0:
-        return False
-    if isinstance(v, dict):
-        v = list(v.keys()) + list(v.values())
-    if isinstance(v, (list, tuple, set, frozenset)):
-        return any(_holds_frame(x, depth - 1) for x in v)
-    return False
-
-
-def _module_frame_holders() -> list[str]:
-    return [
-        f"{mod_name}.{name}"
-        for mod_name, mod in list(sys.modules.items())
-        if mod_name.startswith("rust_cdc_spark")
-        for name, v in list(vars(mod).items())
-        if v is not ranks._PINNED and _holds_frame(v)
-    ]
-
-
 @pytest.mark.parametrize("name", PROBED)
 def test_query_pins_are_released(spark, name):
-    """A query's checkpoints are all in the pinned ledger while its
-    result is live, and none of its stored RDDs survive
-    ``release_pinned``, which the sweeps and the autouse fixture run
-    after each query."""
-    ranks.release_pinned(blocking=True)
+    """The autouse fixture left nothing pinned by earlier tests; the
+    query pins while its result is live, and none of its stored RDDs
+    survive ``release_pinned``, which the sweeps and the autouse fixture
+    run after each query."""
+    assert ranks._PINNED == []
     before = _stored_rdd_ids(spark)
     df = load_all()[name].spark_fn(spark, SF_SMOKE)
     df.write.format("noop").mode("overwrite").save()
-    assert _module_frame_holders() == []
+    assert ranks._PINNED
     ranks.release_pinned(blocking=True)
     assert ranks._PINNED == []
     assert _stored_rdd_ids(spark) - before == set()
@@ -132,10 +109,6 @@ def test_no_module_level_frame_holders():
         os.path.join("operators", "ranks.py") + ":_PINNED",
         os.path.join("queries", "__init__.py") + ":REGISTRY",
     }
-    from rust_cdc_spark.queries import REGISTRY
-
-    load_all()
-    assert not _holds_frame(REGISTRY)
 
 
 def test_check_correctness_releases_per_query(spark, monkeypatch):
