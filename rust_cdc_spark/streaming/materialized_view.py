@@ -16,24 +16,24 @@ micro-units), so the maintained view equals a full recompute
 bit-for-bit — asserted after every refresh in
 tests/test_incremental_view.py.
 
-Crash safety mirrors the table's own txn pattern: the view snapshot
-records the base-table version it reflects; a replayed refresh for an
-already-applied version is a no-op, and refresh always advances from
-the recorded version, so missed intermediate versions are folded into
-one catch-up diff (diff(v_view, v_table) telescopes).
+Crash safety is the table's own txn pattern: the view is stored as a
+``ParquetUpsertTable`` keyed on the group columns, and each commit
+records the base-table version it reflects as a ``txn`` entry; a
+replayed refresh for an already-applied version is a no-op, and refresh
+always advances from the recorded version, so missed intermediate
+versions are folded into one catch-up diff (diff(v_view, v_table)
+telescopes).
 """
 
 from __future__ import annotations
-
-import json
-import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rust_cdc_spark.operators import incremental as IV
-from rust_cdc_spark.sources.tables import read_parquet
 from rust_cdc_spark.streaming.pipeline import ParquetUpsertTable
+
+BASE_APP_ID = "base"  # the txn entry holding the reflected base version
 
 
 class MaterializedAggView:
@@ -51,36 +51,18 @@ class MaterializedAggView:
         count_col: str = "n_rows",
         sum_exprs: dict[str, Column] | None = None,
     ):
-        self.path = path
+        self.table = ParquetUpsertTable(path, group_cols)
         self.group_cols = group_cols
         self.count_col = count_col
         self.sum_exprs = sum_exprs or {}
-        os.makedirs(path, exist_ok=True)
 
     # ── state ───────────────────────────────────────────────────────────
-    def _meta_path(self) -> str:
-        return os.path.join(self.path, "_view_meta.json")
-
     def base_version(self) -> int:
         """Base-table version this view currently reflects (−1: empty)."""
-        if not os.path.exists(self._meta_path()):
-            return -1
-        with open(self._meta_path()) as fh:
-            return json.load(fh)["base_version"]
-
-    def _commit(self, df: DataFrame, base_version: int) -> None:
-        out = os.path.join(self.path, f"v={base_version}")
-        df.write.mode("overwrite").parquet(out)
-        tmp = self._meta_path() + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"base_version": base_version}, fh)
-        os.replace(tmp, self._meta_path())
+        return self.table._meta()["txn"].get(BASE_APP_ID, -1)
 
     def read(self, spark: SparkSession) -> DataFrame | None:
-        v = self.base_version()
-        if v < 0:
-            return None
-        return read_parquet(spark, os.path.join(self.path, f"v={v}"))
+        return self.table.read(spark)
 
     # ── measures ────────────────────────────────────────────────────────
     def _measured(self, images: DataFrame) -> DataFrame:
@@ -119,7 +101,7 @@ class MaterializedAggView:
                 self.count_col,
                 self._sum_col_map(),
             )
-            self._commit(view, target_v)
+            self.table.overwrite(view, BASE_APP_ID, target_v)
             return
         old = self._measured(
             changes.filter(F.col("before").isNotNull()).select("before.*")
@@ -137,4 +119,4 @@ class MaterializedAggView:
             self.count_col,
             self._sum_col_map(),
         )
-        self._commit(view, target_v)
+        self.table.overwrite(view, BASE_APP_ID, target_v)

@@ -11,16 +11,16 @@ upsert buffer → partitioned Parquet/Delta commit → SQL. Spark-first:
 Each microbatch is materialised once per microbatch: one count evaluates
 the source into a cache, and the MERGE reads only that cache.
 
-The sink is a ``ParquetUpsertTable``: a versioned-snapshot parquet table
-with an atomic version pointer — the same transactional contract the
-reference builds on delta-rs (prepare → commit version N+1,
-/root/reference/src/delta/mod.rs:301-350), reduced to what plain
-parquet + a rename can guarantee. There is no Delta MERGE path; Delta
-readers are served by ``export_delta_log``, which writes a Delta-protocol
-log over the retained snapshots.
+The sink is a ``ParquetUpsertTable``: versioned parquet snapshots whose
+one commit record is a Delta-protocol log the sink writes itself — the
+transaction the reference commits through delta-rs (``Add`` actions,
+then ``try_commit_transaction(version+1)``,
+/root/reference/src/delta/mod.rs:301-350), put-if-absent on a local
+file system. There is no Delta MERGE path: the log is JSON, written
+without delta-spark.
 
-Exactly-once: Spark's offset log + ``txn_version`` tracking in the table
-metadata — a replayed microbatch (same epoch id) is skipped, making the
+Exactly-once: Spark's offset log + ``txn_version`` tracking in the log's
+``txn`` actions — a replayed microbatch (same epoch id) is skipped, making the
 foreachBatch MERGE idempotent. This is strictly stronger than the
 reference's 5 s async offset commit, which can re-deliver after a crash
 (at-least-once, /root/reference/src/mysql/conn.rs:272-295).
@@ -30,7 +30,10 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
+import time
+import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -67,11 +70,20 @@ def typed_images(changes: DataFrame, schema: T.StructType) -> DataFrame:
 class ParquetUpsertTable:
     """Versioned parquet table with MERGE semantics.
 
-    Layout: ``<path>/v=<N>/*.parquet`` snapshots + ``<path>/_meta.json``
-    holding {"version": N, "txn": {app_id: last_epoch}}. Readers resolve
-    the pointer then scan one snapshot directory — writers never mutate a
-    committed snapshot (same optimistic-commit shape as Delta, without
-    multi-writer arbitration).
+    Layout: ``<path>/v=<N>/*.parquet`` holds all of version N, and
+    ``<path>/_delta_log/<N:020d>.json`` is its commit, in the Delta
+    transaction protocol: ``protocol`` and ``metaData`` in commit 0,
+    ``metaData`` again when the schema changes, ``remove`` for each file
+    of version N−1 and ``add`` for each file of version N, then one
+    ``txn {appId, version}`` per idempotence entry, re-stated in every
+    commit. The log is the only commit record: a ``v=N`` without a
+    commit is not a version. A commit is put-if-absent (``os.link``),
+    so an existing commit is never overwritten.
+
+    Not written: ``add.stats``, log checkpoints and log cleanup. Nor is
+    there multi-writer arbitration: two writers share the ``v=N``
+    directory, so a losing writer's ``mode("overwrite")`` has already
+    deleted the winner's files before its log link fails.
     """
 
     def __init__(
@@ -85,20 +97,104 @@ class ParquetUpsertTable:
         self.key_cols = key_cols
         self.partition_by = partition_by or []
         self.image_schema = image_schema
+        self._schema: tuple[int, str | None] = (-1, None)  # last commit's
 
-    # ── metadata ────────────────────────────────────────────────────────
+    # ── commit log ──────────────────────────────────────────────────────
+    def _log_path(self, version: int) -> str:
+        return os.path.join(self.path, "_delta_log", f"{version:020d}.json")
+
+    def _actions(self, version: int) -> list[dict]:
+        with open(self._log_path(version)) as fh:
+            return [json.loads(line) for line in fh]
+
     def _meta(self) -> dict:
-        p = os.path.join(self.path, "_meta.json")
-        if not os.path.exists(p):
+        """The newest commit's ``{"version", "txn"}``."""
+        log_dir = os.path.join(self.path, "_delta_log")
+        names = os.listdir(log_dir) if os.path.isdir(log_dir) else []
+        commits = [int(n[:-5]) for n in names
+                   if n.endswith(".json") and n[:-5].isdigit()]
+        if not commits:
             return {"version": -1, "txn": {}}
-        with open(p) as fh:
-            return json.load(fh)
+        v = max(commits)
+        txn = {a["txn"]["appId"]: a["txn"]["version"]
+               for a in self._actions(v) if "txn" in a}
+        return {"version": v, "txn": txn}
+
+    def _schema_at(self, version: int) -> str | None:
+        """The schemaString in force at ``version``: its newest
+        ``metaData``. A writer remembers its own last commit's, so it
+        reads the log back only once."""
+        if self._schema[0] == version:
+            return self._schema[1]
+        for v in range(version, -1, -1):
+            for a in self._actions(v):
+                if "metaData" in a:
+                    return a["metaData"]["schemaString"]
+        return None
+
+    def _files(self, version: int) -> list[str]:
+        snap = self._snapshot_dir(version)
+        return sorted(
+            os.path.join(root, n)
+            for root, _dirs, names in os.walk(snap)
+            for n in names
+            if n.endswith(".parquet")
+        )
 
     def _commit_meta(self, meta: dict) -> None:
-        tmp = os.path.join(self.path, "_meta.json.tmp")
+        """Commit version ``meta["version"]`` of schema ``meta["schema"]``
+        with the idempotence entries ``meta["txn"]``: the one commit
+        point, read back by ``_meta``. Reads no data: the file list and
+        sizes come from the directory, partition values from its layout.
+        Raises ``FileExistsError`` when that version is committed."""
+        v = meta["version"]
+        # Every column nullable, as Delta records it and Spark reads back.
+        schema = re.sub(r'"(nullable|containsNull|valueContainsNull)":false',
+                        r'"\1":true', meta["schema"].json())
+        actions = []
+        if v == 0:
+            actions.append(
+                {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
+            )
+        if schema != self._schema_at(v - 1):
+            actions.append({"metaData": {
+                "id": str(uuid.uuid5(uuid.NAMESPACE_URL, self.path)),
+                "format": {"provider": "parquet", "options": {}},
+                "schemaString": schema,
+                "partitionColumns": list(self.partition_by),
+                "configuration": {},
+            }})
+        now = int(time.time() * 1000)
+        for f in self._files(v - 1):
+            actions.append({"remove": {
+                "path": os.path.relpath(f, self.path),
+                "deletionTimestamp": now,
+                "dataChange": True,
+            }})
+        snap = self._snapshot_dir(v)
+        for f in self._files(v):
+            rel = os.path.relpath(os.path.dirname(f), snap)
+            actions.append({"add": {
+                "path": os.path.relpath(f, self.path),
+                "partitionValues": dict(
+                    seg.split("=", 1) for seg in rel.split(os.sep) if "=" in seg
+                ),
+                "size": os.path.getsize(f),
+                "modificationTime": int(os.path.getmtime(f) * 1000),
+                "dataChange": True,
+            }})
+        for app_id, txn_version in meta["txn"].items():
+            actions.append({"txn": {"appId": app_id, "version": txn_version}})
+        final = self._log_path(v)
+        os.makedirs(os.path.dirname(final), exist_ok=True)
+        tmp = f"{final}.{uuid.uuid4().hex}.tmp"
         with open(tmp, "w") as fh:
-            json.dump(meta, fh)
-        os.replace(tmp, os.path.join(self.path, "_meta.json"))  # atomic
+            fh.writelines(json.dumps(a) + "\n" for a in actions)
+        try:
+            os.link(tmp, final)  # put-if-absent: fails if ``final`` exists
+        finally:
+            os.unlink(tmp)
+        self._schema = (v, schema)
 
     def version(self) -> int:
         return self._meta()["version"]
@@ -109,25 +205,22 @@ class ParquetUpsertTable:
     # ── read ────────────────────────────────────────────────────────────
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame | None:
         """Read the current snapshot, or time-travel to ``version`` if it
-        is still retained (Delta ``VERSION AS OF`` analog)."""
+        is committed and still retained (Delta ``VERSION AS OF`` analog)."""
         v = self.version() if version is None else version
         if v < 0:
             return None
         snap = self._snapshot_dir(v)
-        if not os.path.isdir(snap):
-            raise ValueError(
-                f"version {v} not retained (older than the retention window)"
-            )
+        if not (os.path.exists(self._log_path(v)) and os.path.isdir(snap)):
+            raise ValueError(f"version {v} is not committed or no longer retained")
         return read_parquet(spark, snap)
 
     def history(self) -> list[int]:
-        """Retained snapshot versions, oldest first (DESCRIBE HISTORY
-        analog)."""
+        """Committed versions whose snapshot is retained, oldest first
+        (DESCRIBE HISTORY analog)."""
         if not os.path.isdir(self.path):
             return []
-        return sorted(
-            int(d.split("=")[1]) for d in os.listdir(self.path) if d.startswith("v=")
-        )
+        versions = (int(d[2:]) for d in os.listdir(self.path) if d.startswith("v="))
+        return sorted(v for v in versions if os.path.exists(self._log_path(v)))
 
     def register_view(self, spark: SparkSession, name: str) -> None:
         df = self.read(spark)
@@ -142,13 +235,30 @@ class ParquetUpsertTable:
             writer = writer.partitionBy(*self.partition_by)
         writer.parquet(out)
 
-    def overwrite(self, df: DataFrame) -> None:
-        meta = self._meta()
+    @staticmethod
+    def _applied(meta: dict, app_id: str, txn_version: int | None) -> bool:
+        return txn_version is not None and meta["txn"].get(app_id, -1) >= txn_version
+
+    def _commit(
+        self, df: DataFrame, meta: dict, app_id: str, txn_version: int | None
+    ) -> None:
+        """Write ``df`` as the version after ``meta``'s and commit it."""
         v = meta["version"] + 1
         self._write_snapshot(df, v)
-        meta["version"] = v
-        self._commit_meta(meta)
+        txn = dict(meta["txn"])
+        if txn_version is not None:
+            txn[app_id] = txn_version
+        self._commit_meta({"version": v, "txn": txn, "schema": df.schema})
         self._cleanup(keep_from=v)
+
+    def overwrite(
+        self, df: DataFrame, app_id: str = "cdc", txn_version: int | None = None
+    ) -> None:
+        """Replace the table with ``df``. ``app_id``/``txn_version`` are
+        ``merge``'s idempotence pair: an applied one is a no-op."""
+        meta = self._meta()
+        if not self._applied(meta, app_id, txn_version):
+            self._commit(df, meta, app_id, txn_version)
 
     def merge(
         self,
@@ -166,11 +276,11 @@ class ParquetUpsertTable:
         if order_by is None:
             order_by = DEFAULT_ORDER
         meta = self._meta()
-        if txn_version is not None and meta["txn"].get(app_id, -1) >= txn_version:
+        if self._applied(meta, app_id, txn_version):
             return  # already applied — replayed microbatch
         spark = changes.sparkSession
         changes = changes.filter(F.col("op").isin(*ROW_OPS))
-        target = self.read(spark)
+        target = self.read(spark, meta["version"])
         if isinstance(changes.schema["before"].dataType, T.MapType):
             schema = self.image_schema
             if schema is None:
@@ -209,26 +319,9 @@ class ParquetUpsertTable:
                 )
             changes = typed_images(changes, schema)
         if target is None:
-            from rust_cdc_spark.operators.collapse import collapse_last_image
-
-            final = collapse_last_image(
-                changes.withColumns(
-                    {k: F.coalesce(F.col(f"after.{k}"), F.col(f"before.{k}"))
-                     for k in self.key_cols}
-                ),
-                self.key_cols,
-                order_by,
-            )
-            merged = final.filter(F.col("op") != "D").select(F.col("after.*"))
-        else:
-            merged = merge_upsert(target, changes, self.key_cols, order_by)
-        v = meta["version"] + 1
-        self._write_snapshot(merged, v)
-        meta["version"] = v
-        if txn_version is not None:
-            meta["txn"][app_id] = txn_version
-        self._commit_meta(meta)
-        self._cleanup(keep_from=v)
+            target = changes.select("after.*").limit(0)
+        merged = merge_upsert(target, changes, self.key_cols, order_by)
+        self._commit(merged, meta, app_id, txn_version)
 
     def compact(
         self,
@@ -248,14 +341,9 @@ class ParquetUpsertTable:
         v = self.version()
         if v < 0:
             return
-        snap = self._snapshot_dir(v)
-        size = sum(
-            os.path.getsize(os.path.join(root, f))
-            for root, _, files in os.walk(snap)
-            for f in files
-        )
+        size = sum(os.path.getsize(f) for f in self._files(v))
         n_files = max(1, round(size / target_file_bytes))
-        df = read_parquet(spark, snap)
+        df = self.read(spark, v)
         if zorder_by:
             from rust_cdc_spark.operators.layout import with_zorder_key
 
@@ -280,6 +368,12 @@ class ParquetUpsertTable:
         to_version = self.version() if to_version is None else to_version
         old = self.read(spark, from_version)
         new = self.read(spark, to_version)
+        if old.columns != new.columns:  # a late column widened the table
+            old = old.select(*[
+                F.col(c) if c in old.columns
+                else F.lit(None).cast(new.schema[c].dataType).alias(c)
+                for c in new.columns
+            ])
         keys = self.key_cols
         o = old.select(
             *[F.col(k).alias(f"__ok_{k}") for k in keys],
@@ -306,97 +400,6 @@ class ParquetUpsertTable:
             )
             .select("op", "before", "after")
         )
-
-    # ── Delta-format interop ────────────────────────────────────────────
-    def export_delta_log(self, spark: SparkSession) -> str:
-        """Write a Delta-protocol ``_delta_log`` describing the retained
-        snapshot history, so a real Delta reader can open this table's
-        data files (reference commits native Delta transactions,
-        /root/reference/src/delta/mod.rs:301-350; this image has no
-        delta-spark jars, so the LOG FORMAT itself — the public Delta
-        transaction protocol — is produced directly and structurally
-        tested: protocol/metaData actions, remove+add per commit,
-        partitionValues parsed from the layout, schemaString =
-        Spark ``StructType.json()`` exactly as Delta stores it).
-
-        Each retained snapshot is a full overwrite, so commit k is
-        "remove every file of snapshot k−1, add every file of snapshot
-        k" with ``dataChange: true`` — the same action stream Delta's
-        own ``overwrite`` mode emits. Commits are renumbered 0..k over
-        the retained window (Delta requires a contiguous log; retention
-        here plays the role of a checkpoint cutoff).
-
-        The project depends on no Delta reader, so no test reads the
-        log back through one."""
-        import uuid
-
-        hist = self.history()
-        if not hist:
-            raise ValueError("no snapshots to export")
-        log_dir = os.path.join(self.path, "_delta_log")
-        shutil.rmtree(log_dir, ignore_errors=True)
-        os.makedirs(log_dir)
-        schema_json = self.read(spark).schema.json()
-
-        def _files(version: int) -> list[str]:
-            out = []
-            snap = self._snapshot_dir(version)
-            for root, _dirs, names in os.walk(snap):
-                for n in sorted(names):
-                    if n.endswith(".parquet"):
-                        out.append(os.path.join(root, n))
-            return sorted(out)
-
-        def _partition_values(path: str, version: int) -> dict:
-            rel = os.path.relpath(os.path.dirname(path),
-                                  self._snapshot_dir(version))
-            vals = {}
-            for seg in rel.split(os.sep):
-                if "=" in seg:
-                    k, _, v = seg.partition("=")
-                    vals[k] = v
-            return vals
-
-        prev: list[tuple[str, int]] = []  # (relative path, version)
-        for commit, v in enumerate(hist):
-            actions = []
-            if commit == 0:
-                actions.append(
-                    {"protocol": {"minReaderVersion": 1,
-                                  "minWriterVersion": 2}}
-                )
-                actions.append({"metaData": {
-                    "id": str(uuid.uuid5(uuid.NAMESPACE_URL, self.path)),
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": schema_json,
-                    "partitionColumns": list(self.partition_by),
-                    "configuration": {},
-                }})
-            files = _files(v)
-            ts = max(
-                (int(os.path.getmtime(f) * 1000) for f in files), default=0
-            )
-            for rel, _pv in prev:
-                actions.append({"remove": {
-                    "path": rel, "deletionTimestamp": ts,
-                    "dataChange": True,
-                }})
-            prev = []
-            for f in files:
-                rel = os.path.relpath(f, self.path)
-                actions.append({"add": {
-                    "path": rel,
-                    "partitionValues": _partition_values(f, v),
-                    "size": os.path.getsize(f),
-                    "modificationTime": int(os.path.getmtime(f) * 1000),
-                    "dataChange": True,
-                }})
-                prev.append((rel, v))
-            with open(os.path.join(log_dir, f"{commit:020d}.json"),
-                      "w") as fh:
-                for a in actions:
-                    fh.write(json.dumps(a) + "\n")
-        return log_dir
 
     def _cleanup(self, keep_from: int, retain: int = 2) -> None:
         """Drop snapshots older than ``retain`` versions (reference

@@ -239,9 +239,9 @@ class TestRagIngestionToRetrieval:
 
 
 class TestDeltaLogExport:
-    """export_delta_log: structural conformance with the public Delta
-    transaction protocol (no delta jars in the image, so the format
-    itself is asserted and the action stream replayed)."""
+    """The sink's own ``_delta_log``: structural conformance with the
+    public Delta transaction protocol (no delta jars in the image, so the
+    format itself is asserted and the action stream replayed)."""
 
     def _table(self, spark, tmp_path, partitioned=False):
         import json as _json
@@ -279,10 +279,10 @@ class TestDeltaLogExport:
         from pyspark.sql import types as T
 
         t = self._table(spark, tmp_path)
-        log_dir = t.export_delta_log(spark)
+        log_dir = _os.path.join(t.path, "_delta_log")
         commits, actions = self._actions(log_dir)
         assert commits[0] == "0" * 20 + ".json"
-        assert len(commits) == len(t.history())
+        assert len(commits) == t.version() + 1
         first = actions[0]
         assert first[0]["protocol"] == {
             "minReaderVersion": 1,
@@ -321,8 +321,10 @@ class TestDeltaLogExport:
         )
 
     def test_partition_values_parsed_from_layout(self, spark, tmp_path):
+        import os as _os
+
         t = self._table(spark, tmp_path, partitioned=True)
-        log_dir = t.export_delta_log(spark)
+        log_dir = _os.path.join(t.path, "_delta_log")
         _commits, actions = self._actions(log_dir)
         md = actions[0][1]["metaData"]
         assert md["partitionColumns"] == ["part"]
@@ -373,7 +375,7 @@ class TestDeltaLogExport:
         ).coalesce(1)
         t.overwrite(df1)
         t.overwrite(df2)
-        log_dir = t.export_delta_log(spark)
+        log_dir = _os.path.join(t.path, "_delta_log")
 
         out, file_ids = [], {}
         for f in sorted(_os.listdir(log_dir)):

@@ -508,26 +508,60 @@ def test_all_routed_away_batch_commits_without_touching_sink(spark, tmp_path):
 
 
 class _FailOnceTable(ParquetUpsertTable):
-    """Raises from inside its second ``merge`` (at the snapshot write)."""
+    """Raises on its second ``merge``: inside the snapshot write, or right
+    after the snapshot write, the commit or the cleanup returns."""
 
-    def __init__(self, *args, **kwargs):
+    def __init__(self, *args, fail_at, **kwargs):
         super().__init__(*args, **kwargs)
+        self.fail_at = fail_at
         self.calls = 0
 
     def merge(self, changes, *args, **kwargs):
         self.calls += 1
         return super().merge(changes, *args, **kwargs)
 
+    def _fail(self, point):
+        if self.calls == 2 and self.fail_at == point:
+            raise RuntimeError(f"injected failure {point}")
+
     def _write_snapshot(self, df, version):
-        if self.calls == 2:
-            raise RuntimeError("injected snapshot-write failure")
+        self._fail("in_write_snapshot")
         super()._write_snapshot(df, version)
+        self._fail("after_write_snapshot")
+
+    def _commit_meta(self, meta):
+        super()._commit_meta(meta)
+        self._fail("after_commit_meta")
+
+    def _cleanup(self, keep_from, retain=2):
+        super()._cleanup(keep_from, retain)
+        self._fail("after_cleanup")
 
 
-def test_no_cached_batch_outlives_its_microbatch(spark, binlog_dir, tmp_path):
+def _log_live_files(table) -> set:
+    """The file set that replaying the whole Delta log leaves."""
+    live = set()
+    for v in range(table.version() + 1):
+        for a in table._actions(v):
+            if "remove" in a:
+                live.discard(a["remove"]["path"])
+            elif "add" in a:
+                live.add(a["add"]["path"])
+    return live
+
+
+def _snapshot_files(table) -> set:
+    return {os.path.relpath(f, table.path) for f in table._files(table.version())}
+
+
+@pytest.mark.parametrize("fail_at", ["in_write_snapshot", "after_write_snapshot",
+                                     "after_commit_meta", "after_cleanup"])
+def test_no_cached_batch_outlives_its_microbatch(spark, binlog_dir, tmp_path, fail_at):
     """Each microbatch is persisted for its MERGE only: no cached RDD is
-    left after a clean run, nor after a batch whose merge raises; a
-    restart after the failure still converges to the batch replay."""
+    left after a clean run, nor after a batch whose merge raises at any
+    step of the sink. Before the restart no uncommitted version is
+    visible; after it the table converges to the batch replay and the
+    log's txn entry to the last committed epoch."""
     from pyspark.errors import StreamingQueryException
 
     before = _persistent_rdd_ids(spark)
@@ -535,13 +569,18 @@ def test_no_cached_batch_outlives_its_microbatch(spark, binlog_dir, tmp_path):
     assert _persistent_rdd_ids(spark) == before
 
     path, cp = str(tmp_path / "failing"), str(tmp_path / "cp_fail")
-    table = _FailOnceTable(path, ["id"], image_schema=USERS_SCHEMA)
+    table = _FailOnceTable(path, ["id"], image_schema=USERS_SCHEMA, fail_at=fail_at)
     q = start_cdc_pipeline(spark, binlog_dir, table, dbs=["app"], tables=["users"],
                            checkpoint_dir=cp, max_events_per_trigger=2)
     with pytest.raises(StreamingQueryException, match="injected"):
         q.processAllAvailable()
     q.stop()
-    assert table.calls == 2 and table.version() == 0
+    committed = 1 if fail_at in ("after_commit_meta", "after_cleanup") else 0
+    assert table.calls == 2 and table.version() == committed
+    assert table.history()[-1] == committed
+    with pytest.raises(ValueError):
+        table.read(spark, committed + 1)
+    assert _log_live_files(table) == _snapshot_files(table)
     assert _persistent_rdd_ids(spark) == before
 
     restarted = ParquetUpsertTable(path, ["id"], image_schema=USERS_SCHEMA)
@@ -552,7 +591,35 @@ def test_no_cached_batch_outlives_its_microbatch(spark, binlog_dir, tmp_path):
     q.stop()
     assert {r.id: r.balance for r in restarted.read(spark).collect()} == {
         1: 15.0, 3: 30.0}
+    last_epoch = max(int(f) for f in os.listdir(os.path.join(cp, "commits"))
+                     if f.isdigit())
+    assert restarted._meta()["txn"]["cdc"] == last_epoch
+    adds = [a["add"]["path"] for a in restarted._actions(restarted.version())
+            if "add" in a]
+    assert adds and all(os.path.exists(os.path.join(path, p)) for p in adds)
+    assert _log_live_files(restarted) == _snapshot_files(restarted)
     assert _persistent_rdd_ids(spark) == before
+
+
+def test_commit_is_put_if_absent(tmp_path):
+    """Committing a version whose log file exists raises and leaves the
+    existing commit byte-identical; no temp file is left behind."""
+    table = ParquetUpsertTable(str(tmp_path / "t"), ["id"])
+    snap = tmp_path / "t" / "v=0"
+    snap.mkdir(parents=True)
+    (snap / "part-00000.parquet").write_bytes(b"PAR1")
+    schema = T.StructType([T.StructField("id", T.LongType())])
+    table._commit_meta({"version": 0, "txn": {"cdc": 0}, "schema": schema})
+    log_dir = tmp_path / "t" / "_delta_log"
+    first = (log_dir / f"{0:020d}.json").read_bytes()
+
+    (snap / "part-00001.parquet").write_bytes(b"PAR1")
+    with pytest.raises(FileExistsError):
+        table._commit_meta({"version": 0, "txn": {"cdc": 1}, "schema": schema})
+    assert (log_dir / f"{0:020d}.json").read_bytes() == first
+    assert os.listdir(log_dir) == [f"{0:020d}.json"]
+    assert table._meta() == {"version": 0, "txn": {"cdc": 0}}
+    assert table.history() == [0]
 
 
 def _plan_nodes(plan) -> list[str]:
@@ -695,3 +762,57 @@ def test_late_column_keeps_its_values(spark, tmp_path):
                 txn_version=1)
     got = {r.id: (r.a, r.b) for r in table.read(spark).collect()}
     assert got == {"1": ("x", "set"), "2": ("y", None), "3": ("z", "new")}
+
+
+def test_diff_and_view_across_a_late_column(spark, tmp_path):
+    """A late column is recorded in the commit's schema, and ``diff``
+    across the widening (and the view refresh that calls it) compares
+    the old rows with the new column as NULL."""
+    from rust_cdc_spark.datamodel import cdc_envelope_schema
+    from rust_cdc_spark.streaming.materialized_view import MaterializedAggView
+
+    def batch(rows):
+        return spark.createDataFrame(
+            [(datetime.datetime(2024, 1, 1), 1, "binlog.000001", pos, None,
+              None, "app", "users", op, None, after, None)
+             for pos, op, after in rows],
+            cdc_envelope_schema(),
+        )
+
+    table = ParquetUpsertTable(str(tmp_path / "late"), ["id"])
+    view = MaterializedAggView(str(tmp_path / "view"), ["a"])
+    table.merge(batch([(1, "I", {"id": "1", "a": "x"}),
+                       (2, "I", {"id": "2", "a": "y"})]), txn_version=0)
+    view.refresh(spark, table)
+    table.merge(batch([(3, "I", {"id": "3", "a": "z", "b": "new"}),
+                       (4, "U", {"id": "1", "a": "x", "b": "set"})]),
+                txn_version=1)
+    schemas = [a["metaData"]["schemaString"] for a in table._actions(1)
+               if "metaData" in a]
+    assert [T.StructType.fromJson(json.loads(s)).names for s in schemas] == [
+        ["id", "a", "b"]]
+    got = {(r.op, (r.after or r.before).id) for r in table.diff(spark, 0, 1).collect()}
+    assert got == {("U", "1"), ("I", "3")}
+    view.refresh(spark, table)
+    assert {r.a: r.n_rows for r in view.read(spark).collect()} == {
+        "x": 1, "y": 1, "z": 1}
+
+
+def test_view_keeps_at_most_retain_snapshots(spark, tmp_path):
+    """The view is stored through ``ParquetUpsertTable``: old snapshots
+    are cleaned up as the base table's are, and the reflected base
+    version is the view commit's ``txn`` entry."""
+    from rust_cdc_spark.streaming.materialized_view import MaterializedAggView
+
+    table = ParquetUpsertTable(str(tmp_path / "base"), ["id"])
+    view = MaterializedAggView(str(tmp_path / "view"), ["grp"])
+    for i in range(5):
+        table.overwrite(spark.createDataFrame(
+            [(k, k % (i + 1)) for k in range(4)], "id long, grp long"))
+        view.refresh(spark, table)
+        assert view.base_version() == table.version()
+    assert len(view.table.history()) == 2
+    assert sorted(d for d in os.listdir(view.table.path) if d.startswith("v=")) == [
+        "v=3", "v=4"]
+    assert {r.grp: r.n_rows for r in view.read(spark).collect()} == {
+        0: 1, 1: 1, 2: 1, 3: 1}
